@@ -28,9 +28,12 @@ object Bench {
 
   private[graft] val WarmupDir = "/root/testdata/sf0.001"
 
-  /** The bench session — ONE definition so BenchOne measures the
-    * identical configuration (cpus default, shuffle partitions,
-    * extensions). */
+  /** The one session every entry point builds, so each runs the
+    * configuration the bench measures: `SPARK_GRAFT_CPUS` cores
+    * (default 4), as many shuffle partitions unless
+    * `SPARK_GRAFT_SHUFFLE` says otherwise, UTC, [[GraftExtensions]],
+    * and `SPARK_GRAFT_CONF` overrides. Tests keep their own fixed
+    * session (SparkSpec). */
   private[graft] def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // baseline shuffle partitions = the core count (right for the

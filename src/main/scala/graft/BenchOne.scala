@@ -6,57 +6,13 @@ import org.apache.spark.sql.SparkSession
   * <query_id>[,<query_id>...] [runs]` — same session config and
   * noop-sink execution as [[Bench]], prints every run's seconds plus
   * the minimum per query, then one machine-readable `FLOORGATE {...}`
-  * JSON line of per-query minima. For bisecting a single query's
-  * regression — or re-timing the floor gate's flagged set — without
-  * paying a JVM spinup per query or the full inventory. */
+  * JSON line of per-query minima. Each run also prints its task-metric
+  * totals and notable stages ([[TaskMetricsListener]]), so a reading
+  * can be attributed (GC? spill? shuffle volume?) instead of guessed
+  * at. For bisecting a single query's regression — or re-timing the
+  * floor gate's flagged set — without paying a JVM spinup per query or
+  * the full inventory. */
 object BenchOne {
-
-  /** Per-run task-metric totals, accumulated by [[MetricsListener]]
-    * when SPARK_GRAFT_METRICS=1 — decomposes a wall-clock reading into
-    * where the executor time went (GC? spill? shuffle volume?) so a
-    * scale-ratio anomaly can be attributed instead of guessed at. */
-  private final class MetricsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    var runTimeMs, gcTimeMs, memSpill, diskSpill, shufWrite, shufRead = 0L
-    var peakMem = 0L
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      Option(e.taskMetrics).foreach { m =>
-        runTimeMs += m.executorRunTime; gcTimeMs += m.jvmGCTime
-        memSpill += m.memoryBytesSpilled; diskSpill += m.diskBytesSpilled
-        shufWrite += m.shuffleWriteMetrics.bytesWritten
-        shufRead += m.shuffleReadMetrics.totalBytesRead
-        peakMem = math.max(peakMem, m.peakExecutionMemory)
-      }
-    def reset(): Unit = {
-      runTimeMs = 0; gcTimeMs = 0; memSpill = 0; diskSpill = 0
-      shufWrite = 0; shufRead = 0; peakMem = 0
-    }
-    // per-stage spill attribution: a 30 GB total is useless until it
-    // names the operator; stage details carry the callsite
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = e.stageInfo.taskMetrics
-      val thresh = if (sys.env.get("SPARK_GRAFT_METRICS_ALL").contains("1"))
-        (1L << 27) else (1L << 30)
-      if (m != null && (m.memoryBytesSpilled > thresh ||
-          (sys.env.get("SPARK_GRAFT_METRICS_ALL").contains("1") &&
-            m.executorRunTime > 20000)))
-        println(f"    [stage ${e.stageInfo.stageId}] " +
-          f"memSpill=${m.memoryBytesSpilled / 1e9}%.1fGB " +
-          f"run=${m.executorRunTime / 1e3}%.0fs tasks=${e.stageInfo.numTasks} " +
-          f"in=${m.inputMetrics.bytesRead / 1e9}%.1fGB " +
-          f"sr=${m.shuffleReadMetrics.totalBytesRead / 1e9}%.1fGB " +
-          f"sw=${m.shuffleWriteMetrics.bytesWritten / 1e9}%.1fGB " +
-          e.stageInfo.rddInfos.flatMap(_.scope).map(_.name)
-            .distinct.mkString("|"))
-    }
-    def report: String =
-      f"run=${runTimeMs / 1e3}%.1fs gc=${gcTimeMs / 1e3}%.1fs " +
-        f"memSpill=${memSpill / 1e9}%.2fGB diskSpill=${diskSpill / 1e9}%.2fGB " +
-        f"shufW=${shufWrite / 1e9}%.2fGB shufR=${shufRead / 1e9}%.2fGB " +
-        f"peakTaskMem=${peakMem / 1e6}%.0fMB"
-  }
 
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').toSeq
@@ -65,24 +21,19 @@ object BenchOne {
     val spark = Bench.session()
     spark.sparkContext.setLogLevel("WARN")
     T.applyScaledShuffle(spark, sfDir)
-    val metrics = if (sys.env.get("SPARK_GRAFT_METRICS").contains("1")) {
-      val l = new MetricsListener; spark.sparkContext.addSparkListener(l); Some(l)
-    } else None
+    val metrics = TaskMetricsListener.install(spark.sparkContext)
     val mins = names.map { name =>
       val fn = SparkEntry.queries(name)
       try Bench.exec(fn(spark, Bench.WarmupDir))
       catch { case t: Throwable => println(s"warmup failed: ${t.toString.take(200)}") }
       val times = (1 to runs).map { i =>
-        metrics.foreach(_.reset())
+        metrics.reset()
         val t0 = System.nanoTime()
         Bench.exec(fn(spark, sfDir))
         val sec = (System.nanoTime() - t0) / 1e9
-        metrics.foreach { l =>
-          // listener events drain async; give the bus a beat so the
-          // report covers the run it labels
-          Thread.sleep(300)
-          println(f"  $name run$i wall=$sec%.2fs ${l.report}")
-        }
+        metrics.drain()
+        println(f"  $name run$i wall=$sec%.2fs ${metrics.report}")
+        metrics.stages.foreach(s => println("    " + s))
         sec
       }
       println(s"$name runs=${times.map(t => f"$t%.2f").mkString(",")} min=${f"${times.min}%.2f"}")

@@ -1,10 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+/** Prints each named query's formatted physical plan at sf0.01, planned
+  * in the bench session ([[Bench.session]]), so the plans shown are the
+  * plans the bench runs: `tools/run.sh graft.Explain <query_id>...` */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8")
-      .config("spark.sql.session.timeZone","UTC").config("spark.ui.enabled","false").getOrCreate()
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.01"
     for (q <- args) {

@@ -42,12 +42,7 @@ object GenScale {
   private[graft] val Stride = 10_000_000L
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("WARN")
     run(args, spark)
     spark.stop()

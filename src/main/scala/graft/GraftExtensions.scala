@@ -17,8 +17,11 @@ import graft.functions.{BloomFunctions, DotProduct, VectorFunctions}
   * [[graft.functions.VectorFunctions.register]] programmatically.
   * This is the deployment route a cluster would use (cluster-wide
   * conf, no code change in user jobs); the registry route stays for
-  * ad-hoc sessions. Verify/Bench/Main set it on their builders, so
-  * the driver's correctness and bench gates exercise this path.
+  * ad-hoc sessions. [[Bench.session]] sets it, and every entry point
+  * (Main, Verify, Bench, BenchOne, Smoke, Explain, GenScale, CoresBench,
+  * StreamBench, the `graft.scale` probes) builds its session there, so
+  * the service, the oracle check, the benches and the printed plans
+  * all exercise this path.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import graft.streaming._
 import graft.streaming.source.Dsv2ReplaySource
-import org.apache.spark.sql.SparkSession
 
 import scala.jdk.CollectionConverters._
 
@@ -46,14 +45,7 @@ object Main {
       .orElse(sys.env.get("CONFIG_PATH"))
       .getOrElse("./config.json")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val cfg = spark.read.option("multiLine", "true").json(configPath).head()

@@ -1,12 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Local t1-equivalent smoke: runs SparkEntry.entry, prints row count. */
+
+/** Local t1-equivalent smoke: runs SparkEntry.entry in the bench
+  * session ([[Bench.session]]), prints row count. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     println("ENTRY ROWS=" + df.count())

@@ -44,35 +44,9 @@ import org.apache.spark.sql.functions._
   *
   * `tools/run.sh graft.scale.MinHashSkewBench [n] [megaFrac] [dest]`
   * defaults n = 100000, megaFrac = 0.3, dest = /tmp/zipf28. Prints
-  * per-stage attributions and one `MHSKEW {...}` line. */
+  * the notable stages' attributions ([[graft.TaskMetricsListener]])
+  * and one `MHSKEW {...}` line. */
 object MinHashSkewBench {
-
-  private final class StageListener
-      extends org.apache.spark.scheduler.SparkListener {
-    var runMs, memSpill, diskSpill, shufRead, shufWrite = 0L
-    var maxTaskMs = 0L
-    val stages = scala.collection.mutable.ArrayBuffer.empty[String]
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      Option(e.taskMetrics).foreach { m =>
-        runMs += m.executorRunTime
-        maxTaskMs = math.max(maxTaskMs, m.executorRunTime)
-        memSpill += m.memoryBytesSpilled; diskSpill += m.diskBytesSpilled
-        shufRead += m.shuffleReadMetrics.totalBytesRead
-        shufWrite += m.shuffleWriteMetrics.bytesWritten
-      }
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = e.stageInfo.taskMetrics
-      if (m != null && m.executorRunTime > 10000)
-        stages += f"stage ${e.stageInfo.stageId}: " +
-          f"run=${m.executorRunTime / 1e3}%.0fs tasks=${e.stageInfo.numTasks} " +
-          f"memSpill=${m.memoryBytesSpilled / 1e9}%.1fGB " +
-          f"sr=${m.shuffleReadMetrics.totalBytesRead / 1e9}%.2fGB " +
-          f"sw=${m.shuffleWriteMetrics.bytesWritten / 1e9}%.2fGB " +
-          f"[${e.stageInfo.name.take(60)}]"
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 100000L
@@ -82,8 +56,7 @@ object MinHashSkewBench {
 
     val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("WARN")
-    val listener = new StageListener
-    spark.sparkContext.addSparkListener(listener)
+    val listener = graft.TaskMetricsListener.install(spark.sparkContext)
 
     // corpus: ids < mega share ONE text verbatim (identical shingle
     // set ⇒ identical minhash signature in every band); tail docs get
@@ -117,11 +90,11 @@ object MinHashSkewBench {
     require(total - megaPairs < math.max(1L, want / 1000),
       s"tail candidates must be collision noise: ${total - megaPairs}")
 
-    listener.stages.foreach(s => println("  " + s))
+    listener.drain().stages.foreach(s => println("  " + s))
     println(f"""MHSKEW {"n": $n, "mega": $mega, "megaPairs": $megaPairs, """ +
       f""""tailPairs": ${total - megaPairs}, """ +
       f""""wallSec": $wallSec%.1f, "execRunSec": ${listener.runMs / 1e3}%.1f, """ +
-      f""""maxTaskSec": ${listener.maxTaskMs / 1e3}%.1f, """ +
+      f""""maxTaskSec": ${listener.maxTaskRunMs / 1e3}%.1f, """ +
       f""""memSpillGB": ${listener.memSpill / 1e9}%.2f, "diskSpillGB": ${listener.diskSpill / 1e9}%.2f, """ +
       f""""shufReadGB": ${listener.shufRead / 1e9}%.2f, "shufWriteGB": ${listener.shufWrite / 1e9}%.2f}""")
     spark.stop()

@@ -21,21 +21,6 @@ import org.apache.spark.sql.functions._
   * line per (k, ship) cell. */
 object RouteCeilingBench {
 
-  private final class DeserListener
-      extends org.apache.spark.scheduler.SparkListener {
-    var deserMs, runMs, tasks = 0L
-    var maxDeserMs = 0L
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      Option(e.taskMetrics).foreach { m =>
-        deserMs += m.executorDeserializeTime
-        maxDeserMs = math.max(maxDeserMs, m.executorDeserializeTime)
-        runMs += m.executorRunTime
-        tasks += 1
-      }
-    def reset(): Unit = { deserMs = 0; runMs = 0; tasks = 0; maxDeserMs = 0 }
-  }
-
   private def serBytes(o: AnyRef): Long = {
     val bos = new java.io.ByteArrayOutputStream()
     val oos = new java.io.ObjectOutputStream(bos)
@@ -53,8 +38,7 @@ object RouteCeilingBench {
     val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.VectorFunctions.register(spark)
-    val listener = new DeserListener
-    spark.sparkContext.addSparkListener(listener)
+    val listener = graft.TaskMetricsListener.install(spark.sparkContext)
 
     // the probe corpus: n quantized vectors, dim 64, `parts` tasks —
     // persisted so every cell scans the identical in-memory frame
@@ -92,8 +76,8 @@ object RouteCeilingBench {
           v.select(col("vec_id"), explode(assignCol).as("_a"))
             .agg(sum(col("_a.cid")), count(lit(1))).collect()
           val sec = (System.nanoTime() - t) / 1e9
-          Thread.sleep(300) // listener bus drain
-          (sec, listener.deserMs, listener.maxDeserMs, listener.runMs,
+          listener.drain()
+          (sec, listener.deserMs, listener.maxTaskDeserMs, listener.runMs,
             listener.tasks)
         }
         val best = times.minBy(_._1)

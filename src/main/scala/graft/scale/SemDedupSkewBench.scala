@@ -25,35 +25,10 @@ import org.apache.spark.sql.functions._
   *
   * `tools/run.sh graft.scale.SemDedupSkewBench [n] [megaFrac] [dest]`
   * defaults n = 100000, megaFrac = 0.3, dest = /tmp/zipf112. Prints
-  * per-stage spill/shuffle attributions (the BenchOne listener's
-  * thresholds) and one machine-readable `SEMSKEW {...}` line. */
+  * the notable stages' spill/shuffle attributions
+  * ([[graft.TaskMetricsListener]]) and one machine-readable
+  * `SEMSKEW {...}` line. */
 object SemDedupSkewBench {
-
-  private final class StageListener
-      extends org.apache.spark.scheduler.SparkListener {
-    var runMs, memSpill, diskSpill, shufRead, shufWrite = 0L
-    var maxTaskMs = 0L
-    val stages = scala.collection.mutable.ArrayBuffer.empty[String]
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      Option(e.taskMetrics).foreach { m =>
-        runMs += m.executorRunTime
-        maxTaskMs = math.max(maxTaskMs, m.executorRunTime)
-        memSpill += m.memoryBytesSpilled; diskSpill += m.diskBytesSpilled
-        shufRead += m.shuffleReadMetrics.totalBytesRead
-        shufWrite += m.shuffleWriteMetrics.bytesWritten
-      }
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = e.stageInfo.taskMetrics
-      if (m != null && m.executorRunTime > 10000)
-        stages += f"stage ${e.stageInfo.stageId}: " +
-          f"run=${m.executorRunTime / 1e3}%.0fs tasks=${e.stageInfo.numTasks} " +
-          f"memSpill=${m.memoryBytesSpilled / 1e9}%.1fGB " +
-          f"sr=${m.shuffleReadMetrics.totalBytesRead / 1e9}%.2fGB " +
-          f"sw=${m.shuffleWriteMetrics.bytesWritten / 1e9}%.2fGB"
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 100000L
@@ -64,8 +39,7 @@ object SemDedupSkewBench {
 
     val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("WARN")
-    val listener = new StageListener
-    spark.sparkContext.addSparkListener(listener)
+    val listener = graft.TaskMetricsListener.install(spark.sparkContext)
 
     // corpus: ids < mega share ONE exact vector (a fixed non-degenerate
     // pattern); the tail is hash-random in [-0.5, 0.5]^64 — natural
@@ -98,10 +72,10 @@ object SemDedupSkewBench {
       s"${badMega.length} mega members not dropped-with-keeper-0, " +
         s"first: ${badMega.take(3).map(i => i -> byId(i))}")
 
-    listener.stages.foreach(s => println("  " + s))
+    listener.drain().stages.foreach(s => println("  " + s))
     println(f"""SEMSKEW {"n": $n, "mega": $mega, "megaOrderedPairs": ${mega * (mega - 1)}, """ +
       f""""wallSec": $wallSec%.1f, "execRunSec": ${listener.runMs / 1e3}%.1f, """ +
-      f""""maxTaskSec": ${listener.maxTaskMs / 1e3}%.1f, """ +
+      f""""maxTaskSec": ${listener.maxTaskRunMs / 1e3}%.1f, """ +
       f""""memSpillGB": ${listener.memSpill / 1e9}%.2f, "diskSpillGB": ${listener.diskSpill / 1e9}%.2f, """ +
       f""""shufReadGB": ${listener.shufRead / 1e9}%.2f, "shufWriteGB": ${listener.shufWrite / 1e9}%.2f}""")
     spark.stop()

@@ -1,8 +1,5 @@
 package graft.scale
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** Subprocess entry for the spill-discipline proof (ScaleSpec): runs
   * one inventory query start-to-finish inside a deliberately
   * memory-starved JVM (the caller passes a small -Xmx, a low
@@ -12,7 +9,9 @@ import org.apache.spark.sql.SparkSession
   * not OOMing — is the discipline a 100 TB executor needs when a
   * partition outgrows its memory share: every blocking operator in
   * the hot queries (shuffle write, sort, window buffer, hash-agg
-  * fallback) must degrade to its external implementation.
+  * fallback) must degrade to its external implementation. The session
+  * is [[graft.Bench.session]]; the caller sets its core count and
+  * shuffle partitions through `SPARK_GRAFT_CPUS` / `SPARK_GRAFT_SHUFFLE`.
   *
   * Usage: SpillProbe <query_id> <sfDir>; prints
   * `SPILL_PROBE ok spilled=<bytes>` on success.
@@ -21,36 +20,16 @@ object SpillProbe {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args(1)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("WARN")
-    val spilled = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null)
-          spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-    })
+    val metrics = graft.TaskMetricsListener.install(spark.sparkContext)
     graft.Bench.exec(graft.SparkEntry.queries(name)(spark, sfDir))
-    // The listener bus is async and this JVM is deliberately starved,
-    // so a GC pause can stall dispatch well past a naive settle check.
-    // All tasks HAVE ended (exec is synchronous); wait until the
-    // counter is stable across three consecutive 1 s reads, capped at
-    // 60 s — under-reporting here would flake the spill assertion.
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    var last = -1L
-    var stable = 0
-    while (stable < 3 && System.nanoTime() < deadline) {
-      val now = spilled.get()
-      if (now == last) stable += 1 else { stable = 0; last = now }
-      Thread.sleep(1000)
-    }
-    println(s"SPILL_PROBE ok spilled=${spilled.get()}")
+    // all tasks HAVE ended (exec is synchronous), but this JVM is
+    // deliberately starved, so a GC pause can stall the bus: the drain
+    // waits up to its 60 s cap rather than under-report the spill
+    metrics.drain()
+    val spilled = metrics.memSpill + metrics.diskSpill
+    println(s"SPILL_PROBE ok spilled=$spilled")
     spark.stop()
   }
 }

@@ -105,16 +105,21 @@ object SyncLogic {
     }
   }
 
-  /** Folds a sorted run of events through [[step]]. */
+  /** Folds a sorted run of events through [[step]], in linear time:
+    * outputs go into a builder (appending each step's list to an
+    * accumulated list would copy it, quadratic in the run length). */
   def run(
       st: SyncState,
       events: Seq[DepthRecord],
-      snapshot: BookSnapshot): (SyncState, List[DepthRecord]) =
-    events.foldLeft((st, List.empty[DepthRecord])) {
-      case ((s, acc), ev) =>
-        val (s2, out) = step(s, ev, snapshot)
-        (s2, acc ::: out)
+      snapshot: BookSnapshot): (SyncState, List[DepthRecord]) = {
+    val out = List.newBuilder[DepthRecord]
+    val end = events.foldLeft(st) { (s, ev) =>
+      val (s2, emitted) = step(s, ev, snapshot)
+      out ++= emitted
+      s2
     }
+    (end, out.result())
+  }
 }
 
 object BookSynchronizer {

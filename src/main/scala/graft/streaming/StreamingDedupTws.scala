@@ -24,7 +24,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * then behavior-identical to [[StreamingDedup]].
   *
   * Requires the RocksDB state store provider (named-state column
-  * families), like [[BookSynchronizerTws]].
+  * families), like [[StreamingSessionize]].
   */
 class DedupKeeperProcessor(ttl: Duration)
     extends StatefulProcessor[

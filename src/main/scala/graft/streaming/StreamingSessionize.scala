@@ -40,7 +40,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, 
   * single-reader per-stream loop.
   *
   * Requires the RocksDB state store provider (named state + timers),
-  * like [[BookSynchronizerTws]]/[[StreamingDedupTws]].
+  * like [[StreamingDedupTws]].
   */
 object StreamingSessionize {
 

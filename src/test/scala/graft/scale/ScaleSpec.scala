@@ -218,7 +218,10 @@ class ScaleSpec extends SparkSpec {
     val logger = scala.sys.process.ProcessLogger(
       l => out.synchronized { out.append(l).append('\n') },
       l => out.synchronized { out.append(l).append('\n') })
-    val code = scala.sys.process.Process(cmd).!(logger)
+    // SpillProbe runs in the bench session: 2 cores and 4 shuffle
+    // partitions keep the starved JVM's concurrent task memory small
+    val code = scala.sys.process.Process(cmd, None,
+      "SPARK_GRAFT_CPUS" -> "2", "SPARK_GRAFT_SHUFFLE" -> "4").!(logger)
     val text = out.toString
     assert(code == 0, s"SpillProbe must complete (no OOM), exit=$code:\n" +
       text.linesIterator.toSeq.takeRight(30).mkString("\n"))

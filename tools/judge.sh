@@ -54,9 +54,22 @@ SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
 BENCH_TOTAL=$(python3 -c "import json;print(round(json.load(open('/tmp/judge_bench.json'))['value'],2))")
 BENCH_ERRS=$(python3 -c "import json;print(len(json.load(open('/tmp/judge_bench.json'))['errors']))")
 
+# floors_gate.py exits 1 when it names regressions; its JSON is then
+# the verdict and is kept. Only output that is not a gate report (a
+# crash) is replaced by a placeholder regression.
+floors_gate() {
+  local out
+  out=$(python3 tools/floors_gate.py "$@" 2>>/tmp/judge_floors.log) || true
+  if echo "$out" | python3 -c "import json,sys;json.load(sys.stdin)['regressions']" 2>/dev/null; then
+    echo "$out"
+  else
+    echo "{\"flagged\":{},\"regressions\":[\"floors_gate $* crashed - see /tmp/judge_floors.log\"],\"floors_updated\":0}"
+  fi
+}
+
 echo "== 4.5/5 per-query floor gate (3x best-known quiet minimum)" >&2
-FLOORS=$(python3 tools/floors_gate.py /tmp/judge_bench.json 2>/tmp/judge_floors.log \
-  || echo '{"flagged":{},"regressions":["floors_gate crashed - see /tmp/judge_floors.log"],"floors_updated":0}')
+: > /tmp/judge_floors.log
+FLOORS=$(floors_gate /tmp/judge_bench.json)
 echo "$FLOORS" > /tmp/judge_floors.json
 NREG=$(python3 -c "import json;print(len(json.load(open('/tmp/judge_floors.json'))['regressions']))")
 
@@ -76,9 +89,7 @@ if [ "$CORES" = "1" ]; then
   # + ratchet, "cores:" keys in tools/floors.json) so a regression in
   # the production path is caught here, not by a judge two rounds later
   if [ -s /tmp/judge_cores.json ]; then
-    CFLOORS=$(python3 tools/floors_gate.py --cores /tmp/judge_cores.json \
-      2>>/tmp/judge_floors.log \
-      || echo '{"flagged":{},"regressions":["cores floors_gate crashed"],"floors_updated":0}')
+    CFLOORS=$(floors_gate --cores /tmp/judge_cores.json)
     CREG=$(echo "$CFLOORS" | python3 -c "import json,sys;print(len(json.load(sys.stdin)['regressions']))")
     NREG=$((NREG + CREG))
     echo "$CFLOORS" > /tmp/judge_cores_floors.json
