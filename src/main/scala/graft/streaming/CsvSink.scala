@@ -1,9 +1,10 @@
 package graft.streaming
 
-import java.io.{BufferedWriter, FileWriter}
+import java.io.FileOutputStream
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 
 /** The reference's CSV storage contract (storage.py:47-82; SURVEY.md
@@ -13,11 +14,12 @@ import org.apache.spark.sql.functions.col
   * appended thereafter; a running saved-batch counter (storage.py:17-18).
   *
   * This single-file append layout is inherently driver-side I/O — it
-  * exists for byte-layout parity with the reference. Rows stream to
-  * the driver via `toLocalIterator` (one partition in memory at a
-  * time, never a full collect). The scale path is the same pipeline
-  * with Spark's native partitioned csv/parquet sink instead — nothing
-  * upstream changes.
+  * exists for byte-layout parity with the reference. A batch is one
+  * job whose tasks render CSV bytes, appended in partition order: the
+  * driver holds one batch's bytes (≈ 1.4 MB per 1000 depth messages),
+  * bounded by the source's per-trigger admission like the reference's
+  * `batch_size` buffer (storage.py:24-36). The scale path swaps in
+  * Spark's partitioned csv/parquet sink; nothing upstream changes.
   *
   * Restart note: like the reference (storage.py:77-82) the file is
   * truncated at startup, so restarting against an existing checkpoint
@@ -31,7 +33,7 @@ final class CsvAppendSink(
     market: String,
     kind: String, // "trades" | "depth"
     columns: Seq[String],
-    truncateOnStart: Boolean = true) extends Serializable {
+    truncateOnStart: Boolean = true) {
 
   val path: Path = Paths.get(basePath, s"$symbol.$market.$kind.csv")
   /** Sidecar recording the last batchId appended — makes the append
@@ -60,15 +62,6 @@ final class CsvAppendSink(
       new String(Files.readAllBytes(batchIdPath)).trim.toLong
     else -1L
 
-  private def render(v: Any): String = v match {
-    case null => ""
-    // Python bool capitalization: the reference persists rows via
-    // pandas DataFrame.to_csv (storage.py:60-66), which renders bools
-    // as 'True'/'False' — so depth's is_snapshot column must too.
-    case b: Boolean => if (b) "True" else "False"
-    case other => other.toString
-  }
-
   /** foreachBatch body. Header iff nothing written yet (storage.py:
     * 67-68, 74-75); replayed batches (batchId already recorded) are
     * skipped.
@@ -96,31 +89,17 @@ final class CsvAppendSink(
       df.foreach(_ => ())
       return
     }
-    val projected = df.select(columns.map(col): _*)
-    val it = projected.toLocalIterator()
-    if (!it.hasNext) return
-    // explicit UTF-8: platform-default charset could diverge from the
-    // reference's UTF-8 CSVs on a non-UTF-8 locale JVM
-    val w = new BufferedWriter(new FileWriter(path.toFile,
-      java.nio.charset.StandardCharsets.UTF_8, true))
+    // ONE action over every partition, empty ones included: a second
+    // re-runs the stateful lineage, a skipped one fails (see above).
+    val rows = df.select(columns.map(col): _*).rdd
+    val parts = df.sparkSession.sparkContext.runJob(rows, CsvAppendSink.renderRows _)
+    if (parts.forall(_.isEmpty)) return
+    val out = new FileOutputStream(path.toFile, true)
     try {
-      if (Files.size(path) == 0L) {
-        w.write(columns.mkString(","))
-        w.newLine()
-      }
-      while (it.hasNext) {
-        val row = it.next()
-        val sb = new StringBuilder
-        var i = 0
-        while (i < row.length) {
-          if (i > 0) sb.append(',')
-          sb.append(render(row.get(i)))
-          i += 1
-        }
-        w.write(sb.toString)
-        w.newLine()
-      }
-    } finally w.close()
+      if (Files.size(path) == 0L)
+        out.write((columns.mkString(",") + System.lineSeparator).getBytes(UTF_8))
+      parts.foreach(out.write)
+    } finally out.close()
     // atomic sidecar update (no torn reads on crash mid-write)
     val tmp = batchIdPath.resolveSibling(batchIdPath.getFileName.toString + ".tmp")
     Files.write(tmp, batchId.toString.getBytes)
@@ -132,6 +111,23 @@ final class CsvAppendSink(
 }
 
 object CsvAppendSink {
+  private def render(v: Any): String = v match {
+    case null => ""
+    // Python bool capitalization: the reference persists rows via
+    // pandas DataFrame.to_csv (storage.py:60-66), which renders bools
+    // as 'True'/'False' — so depth's is_snapshot column must too.
+    case b: Boolean => if (b) "True" else "False"
+    case other => other.toString
+  }
+
+  /** A partition's rows as CSV lines in explicit UTF-8 (the platform
+    * charset may differ). Runs in the task, so it must not touch a sink. */
+  def renderRows(rows: Iterator[Row]): Array[Byte] = {
+    val sb = new StringBuilder
+    rows.foreach(_.toSeq.map(render).addString(sb, "", ",", System.lineSeparator))
+    sb.toString.getBytes(UTF_8)
+  }
+
   /** Column orders are the reference's dict insertion orders
     * (FIXTURES.md §2.5). */
   val tradeColumns: Seq[String] =

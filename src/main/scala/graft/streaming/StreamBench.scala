@@ -22,10 +22,10 @@ import org.apache.spark.sql.streaming.Trigger
   *                  Pipelines.depthRows → sink
   *
   * each against BOTH sinks: the reference's single-file header-once
-  * CSV append (driver-side toLocalIterator — the byte-parity
-  * contract) and the scale-path partitioned parquet writer
-  * (executor-side I/O). CSV vs parquet on the same tape is therefore
-  * a direct measurement of what the single-file contract costs.
+  * CSV append (one job per batch, appended on the driver — the
+  * byte-parity contract) and the scale-path partitioned parquet
+  * writer (executor-side I/O). CSV vs parquet on the same tape is
+  * therefore a direct measurement of what the single-file contract costs.
   *
   * Usage: `tools/run.sh graft.streaming.StreamBench [corpusDir]`
   * (env: SPARK_GRAFT_STREAM_TRADES / _DEPTH message counts,
