@@ -1,11 +1,10 @@
 package graft
 
+import java.net.URI
 import java.nio.file.{Files, Paths}
 
 import graft.streaming._
-import graft.streaming.source.Dsv2ReplaySource
-
-import scala.jdk.CollectionConverters._
+import graft.streaming.source.{Dsv2ReplaySource, RestSnapshotClient}
 
 /** Config-driven entry point — the reference's `main.py` / config.json
   * lifecycle (SURVEY §3.1): load config (path from argv, CONFIG_PATH,
@@ -40,6 +39,24 @@ object Main {
       Option(v).map(_.toString).getOrElse(default)
     } catch { case _: Exception => default }
 
+  /** Driver-side snapshot load before start (SURVEY §3.3), once per
+    * symbol whose stream syncs a book — Runner's stream table says
+    * which (`depth` and `tob`). A `{symbol}.{market}.snapshot.json`
+    * file under `snapshotDir` wins (replay determinism); otherwise
+    * `restBase` is fetched LIVE — the reference's REST GET
+    * (book_utils.py:29). Both go through the one wire-shape parser. */
+  def loadSnapshots(events: Seq[String], snapshotDir: Option[String],
+      restBase: Option[String]): Map[String, BookSnapshot] =
+    events.map(EventId.parse).filter(Runner.needsSnapshot).distinctBy(_.symbolId)
+      .flatMap { id =>
+        snapshotDir.map(Paths.get(_, s"${id.symbolId}.snapshot.json"))
+          .filter(Files.exists(_))
+          .map(f => RestSnapshotClient.parse(Files.readString(f)))
+          .orElse(restBase.map(base =>
+            new RestSnapshotClient(URI.create(base)).fetchRetrying(id.symbol)))
+          .map(id.symbolId -> _)
+      }.toMap
+
   def main(args: Array[String]): Unit = {
     val configPath = args.headOption
       .orElse(sys.env.get("CONFIG_PATH"))
@@ -68,32 +85,7 @@ object Main {
     val snapshotDir = Option(str("snapshot_dir"))
     val snapshotRestBase = Option(str("snapshot_rest_base"))
 
-    // driver-side snapshot load, once per depth stream before start
-    // (SURVEY §3.3). A file under snapshot_dir wins (replay
-    // determinism); otherwise snapshot_rest_base is fetched LIVE via
-    // RestSnapshotClient — the reference's REST GET (book_utils.py:29).
-    val snapshots: Map[String, BookSnapshot] = events
-      .map(EventId.parse).filter(_.eventType == "depth")
-      .flatMap { id =>
-        val fromFile = snapshotDir.flatMap { dir =>
-          val f = Paths.get(dir, s"${id.symbolId}.snapshot.json")
-          if (!Files.exists(f)) None
-          else {
-            val row = spark.read.option("multiLine", "true").json(f.toString).head()
-            def lvls(field: String): Seq[Seq[String]] =
-              row.getAs[scala.collection.Seq[scala.collection.Seq[String]]](field)
-                .map(_.toSeq).toSeq
-            Some(BookSnapshot(
-              row.getAs[Long]("lastUpdateId"), lvls("bids"), lvls("asks")))
-          }
-        }
-        fromFile
-          .orElse(snapshotRestBase.map(base =>
-            new graft.streaming.source.RestSnapshotClient(
-              java.net.URI.create(base)).fetchRetrying(id.symbol)))
-          .map(id.symbolId -> _)
-      }.toMap
-
+    val snapshots = loadSnapshots(events, snapshotDir, snapshotRestBase)
     val source = new Dsv2ReplaySource(fixtureRoot, batchSize, arrivalMs)
     val queries = Runner.startWithSinks(spark,
       StreamConfig(events, basePath, batchSize, sinkFormat), source, snapshots)

@@ -31,7 +31,7 @@ final class CsvAppendSink(
     basePath: String,
     symbol: String,
     market: String,
-    kind: String, // "trades" | "depth"
+    kind: String, // "trades" | "depth" | "ohlcv" | "tob" (Runner's stream table)
     columns: Seq[String],
     truncateOnStart: Boolean = true) {
 
@@ -142,24 +142,5 @@ object CsvAppendSink {
   def forDepth(basePath: String, symbol: String, market: String,
       truncateOnStart: Boolean = true): CsvAppendSink =
     new CsvAppendSink(basePath, symbol, market, "depth", depthColumns,
-      truncateOnStart)
-
-  /** Derived OHLCV candle stream (beyond-reference; column order =
-    * Pipelines.streamingOhlcv's output order). */
-  val ohlcvColumns: Seq[String] =
-    Seq("window_start_ms", "side", "low", "high", "volume", "vwap", "n_trades")
-  def forOhlcv(basePath: String, symbol: String, market: String,
-      truncateOnStart: Boolean = true): CsvAppendSink =
-    new CsvAppendSink(basePath, symbol, market, "ohlcv", ohlcvColumns,
-      truncateOnStart)
-
-  /** Derived top-of-book quote stream (beyond-reference; column order
-    * = book.TopOfBook's field order). */
-  val tobColumns: Seq[String] =
-    Seq("timestamp", "local_timestamp", "best_bid", "best_bid_qty",
-      "best_ask", "best_ask_qty", "spread", "bid_levels", "ask_levels")
-  def forTob(basePath: String, symbol: String, market: String,
-      truncateOnStart: Boolean = true): CsvAppendSink =
-    new CsvAppendSink(basePath, symbol, market, "tob", tobColumns,
       truncateOnStart)
 }

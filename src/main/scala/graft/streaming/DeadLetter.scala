@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -44,7 +44,14 @@ object DeadLetter {
     * valid + quarantined = ingested invariant survives restarts. */
   def start(docs: DataFrame, goodDir: String, badDir: String,
       checkpoint: String): StreamingQuery =
-    docs.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+    quarantine(docs, split, goodDir, badDir, checkpoint)
+
+  /** The per-batch (valid, quarantine) write shared with
+    * [[ContractGate.start]]; only the `split` differs. */
+  private[streaming] def quarantine(stream: DataFrame,
+      split: DataFrame => (DataFrame, DataFrame), goodDir: String,
+      badDir: String, checkpoint: String): StreamingQuery =
+    stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
       val cached = batch.persist()
       try {
         val (good, bad) = split(cached)
@@ -89,15 +96,5 @@ object ContractGate {
     * duplicate and the accounting invariant survives restarts. */
   def start(gated: DataFrame, goodDir: String, badDir: String,
       checkpoint: String): StreamingQuery =
-    gated.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      val cached = batch.persist()
-      try {
-        val (good, bad) = split(cached)
-        IdempotentSink.putBatch(good, id, goodDir)
-        IdempotentSink.putBatch(bad, id, badDir)
-      } finally { cached.unpersist(); () }
-    }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    DeadLetter.quarantine(gated, split, goodDir, badDir, checkpoint)
 }

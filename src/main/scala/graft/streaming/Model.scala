@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.types._
-
-/** Typed model of the reference's two event streams and output tables
+/** Typed model of the reference's output tables and book snapshot
   * (SURVEY.md §1.2; wire shapes in FIXTURES.md §2).
   *
   * Numeric fidelity (SURVEY §1.4): Binance sends prices/quantities as
@@ -11,28 +9,6 @@ import org.apache.spark.sql.types._
   * same: `price`/`quantity` stay `StringType` end-to-end on the
   * streaming path; computation casts to DecimalType(38,18) on demand.
   */
-
-/** Parsed `trade` message (spot_trades_etl.py:44-55 field mapping). */
-final case class TradeEvent(
-    e: String, // event type, "trade"
-    E: Long, // exchange event time, ms
-    s: String, // symbol
-    t: Long, // trade id
-    p: String, // price (decimal string)
-    q: String, // quantity (decimal string)
-    m: Boolean, // is buyer the market maker
-    local_timestamp: Long)
-
-/** Parsed diff-depth message (spot_depth_etl.py:62-73 field mapping). */
-final case class DepthEvent(
-    e: String, // "depthUpdate"
-    E: Long,
-    s: String,
-    U: Long, // first update id
-    u: Long, // last update id
-    b: Seq[Seq[String]], // bids [[price, qty], ...]
-    a: Seq[Seq[String]], // asks
-    local_timestamp: Long)
 
 /** Output row of the trades table (README.md:68-77 of the reference;
   * column order storage contract FIXTURES.md §2.5). */
@@ -79,5 +55,4 @@ final case class BookSnapshot(
 // messages — Binance's field pairs (e/E, U/u, t/T, m/M) collide under
 // Spark's default case-insensitive analysis, so Pipelines parses with
 // json_tuple (positional, key-matched case-sensitively at the JSON
-// level). The wire shapes are documented on the case classes above
-// and in FIXTURES.md §2.
+// level). The wire shapes are documented in FIXTURES.md §2.1-2.2.

@@ -1,8 +1,13 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import scala.collection.immutable.ListMap
+import scala.collection.mutable.ArrayBuffer
 
 /** Stream identity: the reference's dotted quad
   * `exchange.market.symbol.event_type` (factory.py:14). */
@@ -66,153 +71,144 @@ final class FileReplaySource(
   */
 object Runner {
 
-  /** Builds (but does not await) one streaming query per event id.
-    * Returns the queries with their sinks for observability
-    * (§2.1 #19 counters come from StreamingQueryProgress + sink
-    * batchesSaved; the parquet sink has no CsvAppendSink, so None). */
-  def start(
-      spark: SparkSession,
-      config: StreamConfig,
-      source: EventSource,
-      snapshots: Map[String, BookSnapshot] = Map.empty,
-      checkpointRoot: String = "/tmp/graft-checkpoints"): Seq[(StreamingQuery, CsvAppendSink)] = {
-    require(config.sinkFormat == "csv",
-      "Runner.start returns CsvAppendSinks and is csv-only; use " +
-        "startWithSinks for other sink formats")
-    startWithSinks(spark, config, source, snapshots, checkpointRoot)
-      .map { case (q, s) => (q, s.get) }
+  /** Everything an event type decides about its stream — the
+    * reference's factory dispatch (factory.py:19-30) as one table row.
+    * `tape` is the raw stream read (derived types consume their
+    * underlying tape); a `depth` tape is synced against the symbol's
+    * book snapshot before `rows` sees it; `kind` and `columns` name the
+    * output file `{symbol}.{market}.{kind}` and its CSV column order. */
+  private final case class StreamDef(
+      tape: String,
+      rows: (DataFrame, EventId) => DataFrame,
+      kind: String,
+      columns: Seq[String]) {
+    def needsSnapshot: Boolean = tape == "depth"
   }
 
+  /** `ohlcv` (per-minute OHLCV/VWAP candles over the trade tape, SURVEY
+    * §2.4 s09) and `tob` (top-of-book quotes over the SYNCED depth tape,
+    * s10) are beyond the reference; column orders are the reference's
+    * dict insertion orders (FIXTURES.md §2.5), then
+    * Pipelines.streamingOhlcv's and book.TopOfBook's field orders. */
+  private val Streams: ListMap[String, StreamDef] = ListMap(
+    "trade" -> StreamDef("trade", (raw, _) => Pipelines.trades(raw),
+      "trades", CsvAppendSink.tradeColumns),
+    "depth" -> StreamDef("depth", (synced, _) => Pipelines.depthRows(synced),
+      "depth", CsvAppendSink.depthColumns),
+    "ohlcv" -> StreamDef("trade",
+      (raw, _) => Pipelines.streamingOhlcv(Pipelines.trades(raw)), "ohlcv",
+      Seq("window_start_ms", "side", "low", "high", "volume", "vwap", "n_trades")),
+    "tob" -> StreamDef("depth",
+      (synced, id) => graft.book.StreamingBook.topOfBookStream(synced, id.market, id.symbol),
+      "tob", Seq("timestamp", "local_timestamp", "best_bid", "best_bid_qty",
+        "best_ask", "best_ask_qty", "spread", "bid_levels", "ask_levels")))
+
+  /** Whether `id`'s stream syncs a book and so needs a driver-side
+    * snapshot before it starts (Main loads exactly these). */
+  def needsSnapshot(id: EventId): Boolean =
+    Streams.get(id.eventType).exists(_.needsSnapshot)
+
+  /** Builds (but does not await) one streaming query per event id.
+    * Every id, its snapshot and the sink format are checked before the
+    * first query starts, and a start that fails stops the queries
+    * started before it, so a bad config leaves nothing running.
+    * Returns the queries with their sinks for observability
+    * (§2.1 #19 counters come from StreamingQueryProgress + sink
+    * batchesSaved; only the csv sink has a CsvAppendSink). */
   def startWithSinks(
       spark: SparkSession,
       config: StreamConfig,
       source: EventSource,
       snapshots: Map[String, BookSnapshot] = Map.empty,
-      checkpointRoot: String = "/tmp/graft-checkpoints"): Seq[(StreamingQuery, Option[CsvAppendSink])] =
-    {
-    StreamMetrics.ensureListener(spark)
-    config.events.map { idStr =>
+      checkpointRoot: String = "/tmp/graft-checkpoints"): Seq[(StreamingQuery, Option[CsvAppendSink])] = {
+    if (!Seq("csv", "parquet", "bigquery").contains(config.sinkFormat))
+      throw new IllegalArgumentException(
+        s"unsupported sink format '${config.sinkFormat}' (csv|parquet|bigquery)")
+    val planned = config.events.map { idStr =>
       val id = EventId.parse(idStr)
-      // §2.1 #19 observability: the reference's total_messages counter
-      // plus parsed-message count (their difference = dropped corrupt/
-      // non-data messages, the reference's warn-and-drop path) as
-      // observed metrics, accumulated by StreamMetrics' listener.
-      // derived streams consume their underlying tape — the source
-      // directory is keyed by the underlying event type
-      val sourceId = id.eventType match {
-        case "ohlcv" => id.copy(eventType = "trade")
-        case "tob" => id.copy(eventType = "depth")
-        case _ => id
-      }
-      val raw = source.stream(spark, sourceId)
-        .observe("graft_raw", count(lit(1)).as("messages"))
-      val rows = (id.eventType match {
-        case "trade" => Pipelines.trades(raw)
-        case "depth" =>
-          val snapshot = snapshots.getOrElse(id.symbolId,
-            throw new IllegalStateException(
-              s"no order-book snapshot provided for ${id.symbolId}"))
-          Pipelines.depthRows(BookSynchronizer.apply(
-            Pipelines.depthRecords(raw), id.market, id.symbol, snapshot))
-        // beyond-reference derived streams, routed through the same
-        // sink machinery as the raw streams: `...ohlcv` gives
-        // per-minute OHLCV/VWAP candles over the trade tape (SURVEY
-        // §2.4 s09); `...tob` gives the continuous top-of-book quote
-        // stream over the SYNCED depth tape (s10) — same snapshot
-        // requirement as a raw depth stream
-        case "ohlcv" => Pipelines.streamingOhlcv(Pipelines.trades(raw))
-        case "tob" =>
-          val snapshot = snapshots.getOrElse(id.symbolId,
-            throw new IllegalStateException(
-              s"no order-book snapshot provided for ${id.symbolId}"))
-          graft.book.StreamingBook.topOfBookStream(
-            BookSynchronizer.apply(
-              Pipelines.depthRecords(raw), id.market, id.symbol, snapshot),
-            id.market, id.symbol)
-        case other =>
-          throw new IllegalArgumentException(
-            s"unsupported event type '$other' (reference supports trade|depth; " +
-              "futures markets are enumerated but unimplemented, factory.py:26-29; " +
-              "this engine adds derived 'ohlcv')")
-      }).observe("graft_rows", count(lit(1)).as("rows"))
-      val kind = id.eventType match {
-        case "trade" => "trades"
-        case "ohlcv" => "ohlcv"
-        case "tob" => "tob"
-        case _ => "depth"
-      }
-      val writer = config.sinkFormat match {
-        case "csv" =>
-          // fresh start: truncate like the reference; checkpointed
-          // restart: keep the file, the checkpoint skips written batches
-          val freshStart = !java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$checkpointRoot/${id.queryName}.csv"))
-          val sink = id.eventType match {
-            case "trade" => CsvAppendSink.forTrades(config.basePath,
-              id.symbol, id.market, truncateOnStart = freshStart)
-            case "ohlcv" => CsvAppendSink.forOhlcv(config.basePath,
-              id.symbol, id.market, truncateOnStart = freshStart)
-            case "tob" => CsvAppendSink.forTob(config.basePath,
-              id.symbol, id.market, truncateOnStart = freshStart)
-            case _ => CsvAppendSink.forDepth(config.basePath,
-              id.symbol, id.market, truncateOnStart = freshStart)
+      val stream = Streams.getOrElse(id.eventType, throw new IllegalArgumentException(
+        s"unsupported event type '${id.eventType}' (supported: " +
+          s"${Streams.keys.mkString("|")}; futures markets are enumerated but " +
+          "unimplemented in the reference, factory.py:26-29)"))
+      val snapshot = Option.when(stream.needsSnapshot)(snapshots.getOrElse(id.symbolId,
+        throw new IllegalStateException(
+          s"no order-book snapshot provided for ${id.symbolId}")))
+      (id, stream, snapshot)
+    }
+    StreamMetrics.ensureListener(spark)
+    val started = ArrayBuffer.empty[(StreamingQuery, Option[CsvAppendSink])]
+    try planned.foreach { case (id, stream, snapshot) =>
+      started += startStream(spark, config, source, checkpointRoot, id, stream, snapshot)
+    } catch {
+      case t: Throwable => stopAll(started.map(_._1).toSeq); throw t
+    }
+    started.toSeq
+  }
+
+  /** One checked stream: its lineage, then the sink `config` names. */
+  private def startStream(spark: SparkSession, config: StreamConfig,
+      source: EventSource, checkpointRoot: String, id: EventId,
+      stream: StreamDef, snapshot: Option[BookSnapshot]): (StreamingQuery, Option[CsvAppendSink]) = {
+    // §2.1 #19 observability: the reference's total_messages counter
+    // plus output-row count (their difference = dropped corrupt/
+    // non-data messages, the reference's warn-and-drop path) as
+    // observed metrics, accumulated by StreamMetrics' listener.
+    val raw = source.stream(spark, id.copy(eventType = stream.tape))
+      .observe("graft_raw", count(lit(1)).as("messages"))
+    val input = snapshot.fold(raw)(snap => BookSynchronizer.apply(
+      Pipelines.depthRecords(raw), id.market, id.symbol, snap))
+    val rows = stream.rows(input, id).observe("graft_rows", count(lit(1)).as("rows"))
+    // checkpoint path includes the sink format: offsets committed for
+    // one sink must never satisfy a different one
+    val checkpoint = s"$checkpointRoot/${id.queryName}.${config.sinkFormat}"
+    def writer(df: DataFrame) = df.writeStream
+      .queryName(id.queryName)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.ProcessingTime("1 second"))
+    config.sinkFormat match {
+      case "csv" =>
+        // fresh start: truncate like the reference; checkpointed
+        // restart: keep the file, the checkpoint skips written batches
+        val sink = new CsvAppendSink(config.basePath, id.symbol, id.market,
+          stream.kind, stream.columns,
+          truncateOnStart = !Files.exists(Paths.get(checkpoint)))
+        val q = writer(rows)
+          .foreachBatch { (df: DataFrame, bid: Long) => sink.writeBatch(df, bid) }
+          .start()
+        (q, Some(sink))
+      case "parquet" =>
+        // scale path: native partitioned writer, executor-side I/O.
+        // Partition date comes from arrival time when the frame has
+        // one; derived/aggregate frames (ohlcv and any future type)
+        // have no local_timestamp, so their event-time window start
+        // partitions them — selected by what the frame CONTAINS so a
+        // new derived type cannot reintroduce the unresolved-column
+        // crash this guards against.
+        val dateSource =
+          if (rows.columns.contains("local_timestamp")) col("local_timestamp")
+          else col("window_start_ms")
+        val q = writer(rows.withColumn("ingest_date", to_date(timestamp_millis(dateSource))))
+          .format("parquet")
+          .partitionBy("ingest_date")
+          .option("path", s"${config.basePath}/${id.symbolId}.${stream.kind}")
+          .start()
+        (q, None)
+      case "bigquery" =>
+        // The reference declares this sink but leaves it TODO
+        // (factory.py:40-42). Implemented as its load-job staging
+        // half: per-batch idempotent NDJSON under
+        // basePath/bq_staging/<query>/batch_id=N plus the
+        // BigQueryStage.loadCommand contract — only the load API call
+        // itself is not made.
+        val staging = s"${config.basePath}/bq_staging/${id.queryName}"
+        val q = writer(rows)
+          .foreachBatch { (df: DataFrame, bid: Long) =>
+            graft.sinks.BigQueryStage.stageBatch(df, bid, staging)
           }
-          // checkpoint path includes the sink format: offsets committed
-          // for one sink must never satisfy a different one
-          val q = rows.writeStream
-            .queryName(id.queryName)
-            .option("checkpointLocation", s"$checkpointRoot/${id.queryName}.csv")
-            .trigger(Trigger.ProcessingTime("1 second"))
-            .foreachBatch { (df: DataFrame, bid: Long) => sink.writeBatch(df, bid) }
-            .start()
-          (q, Some(sink))
-        case "parquet" =>
-          // scale path: native partitioned writer, executor-side I/O.
-          // Partition date comes from arrival time when the frame has
-          // one; derived/aggregate frames (ohlcv and any future type)
-          // have no local_timestamp, so their event-time window start
-          // partitions them — selected by what the frame CONTAINS so a
-          // new derived type cannot reintroduce the unresolved-column
-          // crash this guards against.
-          val dateSource =
-            if (rows.columns.contains("local_timestamp")) col("local_timestamp")
-            else col("window_start_ms")
-          val q = rows
-            .withColumn("ingest_date",
-              to_date(timestamp_millis(dateSource)))
-            .writeStream
-            .queryName(id.queryName)
-            .format("parquet")
-            .partitionBy("ingest_date")
-            .option("path", s"${config.basePath}/${id.symbolId}.$kind")
-            .option("checkpointLocation", s"$checkpointRoot/${id.queryName}.parquet")
-            .trigger(Trigger.ProcessingTime("1 second"))
-            .start()
-          (q, None)
-        case "bigquery" =>
-          // The reference declares this sink but leaves it TODO
-          // (factory.py:40-42). Implemented as its load-job staging
-          // half: per-batch idempotent NDJSON under
-          // basePath/bq_staging/<query>/batch_id=N plus the
-          // BigQueryStage.loadCommand contract — only the API call is
-          // blocked by the zero-egress environment.
-          val staging = s"${config.basePath}/bq_staging/${id.queryName}"
-          val q = rows.writeStream
-            .queryName(id.queryName)
-            .option("checkpointLocation",
-              s"$checkpointRoot/${id.queryName}.bigquery")
-            .trigger(Trigger.ProcessingTime("1 second"))
-            .foreachBatch { (df: DataFrame, bid: Long) =>
-              graft.sinks.BigQueryStage.stageBatch(df, bid, staging)
-            }
-            .start()
-          (q, None)
-        case other => throw new IllegalArgumentException(
-          s"unsupported sink format '$other' (csv|parquet|bigquery)")
-      }
-      writer
+          .start()
+        (q, None)
     }
-    }
+  }
 
   /** §2.1 #19: the reference's `total_messages` counter, accumulated
     * by [[StreamMetrics]]' listener across the whole run (NOT a

@@ -5,6 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import graft.streaming.BookSnapshot
@@ -35,7 +36,6 @@ final class RestSnapshotClient(
     timeout: java.time.Duration = java.time.Duration.ofSeconds(10)) {
 
   private val http = HttpClient.newBuilder().connectTimeout(timeout).build()
-  private val mapper = new ObjectMapper()
 
   /** The reference's retry semantics, driver-side: book_utils.py:30-33
     * catches the failed GET, warns, and tries again when the next
@@ -87,10 +87,12 @@ object RestSnapshotClient {
     n.elements().asScala.map(l =>
       l.elements().asScala.map(_.asText()).toSeq).toSeq
 
-  /** Parses the depth-snapshot wire JSON (shared with the spec's
-    * malformed-body cases). */
+  /** Parses the depth-snapshot wire JSON — the one parser for REST
+    * bodies and `snapshot_dir` files alike. Non-JSON and a wrong shape
+    * both fail as `malformed depth snapshot`. */
   private[graft] def parse(body: String): BookSnapshot = {
-    val root = mapper.readTree(body)
+    val root = try mapper.readTree(body)
+      catch { case _: JsonProcessingException => null }
     require(root != null && root.hasNonNull("lastUpdateId") &&
       root.has("bids") && root.has("asks"),
       s"malformed depth snapshot: ${body.take(200)}")

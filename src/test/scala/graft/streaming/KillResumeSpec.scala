@@ -57,7 +57,7 @@ class KillResumeSpec extends SparkSpec {
   private def runDepth(fixtures: Path, out: Path, ckpt: Path): Unit = {
     val source = new Dsv2ReplaySource(fixtures.toString, batchSize = 2,
       fixedArrivalMs = Some(1727784005000L))
-    val qs = Runner.start(spark,
+    val qs = Runner.startWithSinks(spark,
       StreamConfig(Seq("binance.spot.bnbusdt.depth"), out.toString),
       source, Map("bnbusdt.spot" -> snapshot), checkpointRoot = ckpt.toString)
     val q = qs.head._1
@@ -77,7 +77,7 @@ class KillResumeSpec extends SparkSpec {
   private def runDepthKilled(fixtures: Path, out: Path, ckpt: Path): Boolean = {
     val source = new Dsv2ReplaySource(fixtures.toString, batchSize = 2,
       fixedArrivalMs = Some(1727784005000L))
-    val qs = Runner.start(spark,
+    val qs = Runner.startWithSinks(spark,
       StreamConfig(Seq("binance.spot.bnbusdt.depth"), out.toString),
       source, Map("bnbusdt.spot" -> snapshot), checkpointRoot = ckpt.toString)
     val q = qs.head._1

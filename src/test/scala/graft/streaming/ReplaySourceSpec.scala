@@ -52,7 +52,7 @@ class ReplaySourceSpec extends SparkSpec {
 
     val source = new Dsv2ReplaySource(fixtures.toString, batchSize = 2,
       fixedArrivalMs = Some(1727784005000L))
-    val qs = Runner.start(spark,
+    val qs = Runner.startWithSinks(spark,
       StreamConfig(Seq("binance.spot.bnbusdt.trade"), out.toString),
       source, Map.empty, checkpointRoot = tmp("ckpt").toString)
     qs.foreach(_._1.processAllAvailable())
@@ -62,7 +62,7 @@ class ReplaySourceSpec extends SparkSpec {
     assert(csv.head == "timestamp,local_timestamp,id,price,quantity,side")
     assert(csv.size == 8) // header + 7 rows
     // multiple flushes (count batching), header only once
-    assert(qs.head._2.batchesSaved == 4) // ceil(7/2)
+    assert(qs.head._2.get.batchesSaved == 4) // ceil(7/2)
     assert(csv.count(_.startsWith("timestamp,")) == 1)
   }
 }

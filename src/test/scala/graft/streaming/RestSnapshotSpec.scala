@@ -170,7 +170,7 @@ class RestSnapshotSpec extends SparkSpec {
       // 3-4. the standard Runner path: sync + CSV sink
       val source = new FileReplaySource(fixtures.toString,
         fixedArrivalMs = Some(1727784001000L))
-      val qs = Runner.start(spark,
+      val qs = Runner.startWithSinks(spark,
         StreamConfig(Seq("binance.spot.bnbusdt.depth"), out.toString),
         source, Map("bnbusdt.spot" -> snap),
         checkpointRoot = tmp("ckpt").toString)

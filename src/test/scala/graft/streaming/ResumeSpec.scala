@@ -30,7 +30,7 @@ class ResumeSpec extends SparkSpec {
     def runOnce(): Unit = {
       val source = new Dsv2ReplaySource(fixtures.toString, batchSize = 2,
         fixedArrivalMs = Some(1727784005000L))
-      val qs = Runner.start(spark,
+      val qs = Runner.startWithSinks(spark,
         StreamConfig(Seq("binance.spot.bnbusdt.trade"), out.toString),
         source, Map.empty, checkpointRoot = ckpt.toString)
       qs.foreach(_._1.processAllAvailable())

@@ -127,7 +127,7 @@ class StreamingAggSpec extends SparkSpec {
     Files.createDirectories(dir)
     Files.write(dir.resolve("messages.jsonl"), lines.asJava)
     val source = new FileReplaySource(fixtures.toString, fixedArrivalMs = Some(base))
-    val qs = Runner.start(spark,
+    val qs = Runner.startWithSinks(spark,
       StreamConfig(Seq("binance.spot.bnbusdt.trade"), out.toString),
       source, Map.empty, checkpointRoot = tmp("ckpt").toString)
     qs.foreach(_._1.processAllAvailable())

@@ -41,9 +41,9 @@ class StreamingPipelineSpec extends SparkSpec {
     asks = Seq(Seq("571.00000000", "1.20000000")))
 
   private def runStreams(events: Seq[String], snaps: Map[String, BookSnapshot],
-      fixtures: Path, out: Path): Seq[(org.apache.spark.sql.streaming.StreamingQuery, CsvAppendSink)] = {
+      fixtures: Path, out: Path): Seq[(org.apache.spark.sql.streaming.StreamingQuery, Option[CsvAppendSink])] = {
     val source = new FileReplaySource(fixtures.toString, fixedArrivalMs = Some(1727784001000L))
-    val qs = Runner.start(spark, StreamConfig(events, out.toString), source, snaps,
+    val qs = Runner.startWithSinks(spark, StreamConfig(events, out.toString), source, snaps,
       checkpointRoot = tmp("ckpt").toString)
     qs.foreach(_._1.processAllAvailable())
     Runner.stopAll(qs.map(_._1))
@@ -82,7 +82,7 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(csv.tail.toList == List(
       "1727784000123,1727784001000,88123001,571.10000000,0.25600000,buy",
       "1727784000456,1727784001000,88123002,571.20000000,1.00000000,sell"))
-    assert(qs.head._2.batchesSaved >= 1)
+    assert(qs.head._2.get.batchesSaved >= 1)
   }
 
   test("s03/s05: depth stream syncs book and replays to CSV layout") {
@@ -119,7 +119,7 @@ class StreamingPipelineSpec extends SparkSpec {
       """{"e":"depthUpdate","E":1,"s":"BNBUSDT","U":156,"u":159,"b":[["1","1"]],"a":[]}""",
       """{"e":"depthUpdate","E":2,"s":"BNBUSDT","U":165,"u":170,"b":[["2","1"]],"a":[]}"""))
     val source = new FileReplaySource(fixtures.toString, fixedArrivalMs = Some(1000L))
-    val qs = Runner.start(spark, StreamConfig(Seq("binance.spot.bnbusdt.depth"), out.toString),
+    val qs = Runner.startWithSinks(spark, StreamConfig(Seq("binance.spot.bnbusdt.depth"), out.toString),
       source, Map("bnbusdt.spot" -> snapshot), checkpointRoot = tmp("ckpt").toString)
     val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       qs.head._1.processAllAvailable()

@@ -148,7 +148,7 @@ class WsSpoolerSpec extends SparkSpec {
     val out = tmp("ws-depth-csv")
     val source = new FileReplaySource(spoolRoot.toString,
       fixedArrivalMs = Some(1727784001000L))
-    val qs = Runner.start(spark,
+    val qs = Runner.startWithSinks(spark,
       StreamConfig(Seq("binance.spot.bnbusdt.depth"), out.toString),
       source, Map("bnbusdt.spot" -> snapshot),
       checkpointRoot = tmp("ckpt").toString)
