@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
 /** Driver benchmark: one JSON line with per-query and total seconds at
   * SPARK_GRAFT_SF_DIR. A warmup pass at sf0.001 runs first (untimed)
@@ -28,12 +29,32 @@ object Bench {
 
   private[graft] val WarmupDir = "/root/testdata/sf0.001"
 
+  /** The checkpoint file manager every session uses (tests too, via
+    * SparkSpec). Spark's default, `FileContextBasedCheckpointFileManager`,
+    * renames through Hadoop's `RawLocalFs`, whose rename runs
+    * `FileUtil.readLink` — one forked `readlink` process for the
+    * source, the destination and each `.crc` file. A
+    * 1000-message depth micro-batch (offset log, commit log, one delta
+    * per state partition) forked about 80 `readlink` and 20 `chmod`
+    * processes. This manager renames with `LocalFileSystem.rename`, a
+    * plain atomic `rename(2)`: 0 `readlink` forks per batch, the same
+    * ~20 `chmod`. It keeps Hadoop's CRC files, Spark's state-file
+    * checksums (`ChecksumCheckpointFileManager` wraps whichever manager
+    * is configured) and the fail-if-exists check of
+    * `createAtomic(overwriteIfPossible = false)`, and writes the same
+    * on-disk layout, so checkpoints written by the default manager
+    * resume unchanged. */
+  private[graft] val CheckpointFileManagerClass: String =
+    classOf[FileSystemBasedCheckpointFileManager].getName
+
   /** The one session every entry point builds, so each runs the
     * configuration the bench measures: `SPARK_GRAFT_CPUS` cores
     * (default 4), as many shuffle partitions unless
     * `SPARK_GRAFT_SHUFFLE` says otherwise, UTC, [[GraftExtensions]],
-    * and `SPARK_GRAFT_CONF` overrides. Tests keep their own fixed
-    * session (SparkSpec). */
+    * [[CheckpointFileManagerClass]] for streaming checkpoints, and
+    * `SPARK_GRAFT_CONF` overrides (which can set the checkpoint
+    * manager back). Tests keep their own fixed session (SparkSpec),
+    * with the same checkpoint file manager. */
   private[graft] def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // baseline shuffle partitions = the core count (right for the
@@ -48,6 +69,8 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        CheckpointFileManagerClass)
     // free-form conf overrides for scale rehearsals ("k=v;k=v") — e.g.
     // spark.sql.adaptive.coalescePartitions.parallelismFirst=false,
     // without which AQE coalesces every post-shuffle stage back to the

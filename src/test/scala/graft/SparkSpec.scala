@@ -13,6 +13,7 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.streaming.checkpointFileManagerClass", Bench.CheckpointFileManagerClass)
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
