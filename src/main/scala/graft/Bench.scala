@@ -107,10 +107,12 @@ object Bench {
       try exec(fn(spark, WarmupDir))
       catch { case t: Throwable => warmupErrors(name) = t.toString.take(200) }
     }
-    // Warm the TARGET dir too: file listing, parquet footers, and the
-    // OS page cache are per-path, so the sf0.001 pass alone leaves the
-    // first timed query paying sfDir metadata+IO (q01 — a trivial
-    // projection — measured ~1s against its ~0.2s steady state).
+    // Warm the TARGET dir too: file listing, parquet footers, the OS
+    // page cache and T.tbl's schema memo are per-path, so the sf0.001
+    // pass alone leaves the first timed query paying sfDir metadata+IO
+    // (q01 — a trivial projection — measured ~1s against its ~0.2s
+    // steady state) and each timed query's first read of a table
+    // paying its schema-inference job.
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       try exec(T.tbl(spark, sfDir, t))

@@ -279,6 +279,15 @@ object StreamBench {
     (sec, outDirs.map(o => spark.read.parquet(o._2).count()).sum)
   }
 
+  /** The tools/floors.json key of a path's rows/s floor at `cores`
+    * session cores: `stream:<path>` for the 32-core floors, and
+    * `stream@<cores>:<path>` at any other core count, because a rate
+    * floor read on one core count says nothing about another
+    * (`semdedup_parquet`: 50,239 rows/s at 32, about 9.5k at 4).
+    * `floors_gate.py --stream` keys its readings the same way. */
+  private[streaming] def floorKey(cores: Int, path: String): String =
+    if (cores == 32) s"stream:$path" else s"stream@$cores:$path"
+
   def main(args: Array[String]): Unit = {
     val corpusRoot = Paths.get(
       args.headOption.getOrElse("/tmp/graft_streambench"))
@@ -343,7 +352,9 @@ object StreamBench {
       e
     }.toOption
     val allResults = (results :+ decoupled) ++ semdedup ++ rocksRows
+    val cores = spark.sparkContext.defaultParallelism
     val json = "{\"metric\":\"stream_throughput\",\"unit\":\"rows_per_sec\"," +
+      s""""cores":$cores,""" +
       s""""corpus":{"trade_msgs":$nTrades,"depth_msgs":$nDepth,""" +
       s""""vec_msgs":$nVecs,""" +
       s""""depth_levels_per_msg":${2 * levels}},"paths":{""" +
@@ -360,18 +371,19 @@ object StreamBench {
     // regression must fail LOUDLY like a batch floor, not drift
     // silently between rounds. Same 3x rule as the batch gate,
     // inverted for rows/s: reading < floor/3 throws. Floors live in
-    // tools/floors.json under "stream:<path>" keys and are ratcheted
-    // (upward, best quiet reading) by `floors_gate.py --stream`.
+    // tools/floors.json under [[floorKey]] keys (one set per core
+    // count) and are ratcheted (upward, best quiet reading) by
+    // `floors_gate.py --stream`.
     // SPARK_GRAFT_STREAM_NOGATE=1 skips (loaded-box diagnostics).
     if (!sys.env.contains("SPARK_GRAFT_STREAM_NOGATE")) {
       val floorsPath = Paths.get("tools/floors.json")
       if (Files.exists(floorsPath)) {
         val txt = new String(Files.readAllBytes(floorsPath))
-        val fl = """"stream:([^"]+)":\s*([0-9.]+)""".r
+        val fl = """"(stream[^"]+)":\s*([0-9.]+)""".r
           .findAllMatchIn(txt)
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
         val bad = allResults.flatMap { case (k, (sec, rows, _)) =>
-          fl.get(k).filter(f => rows / sec < f / 3.0)
+          fl.get(floorKey(cores, k)).filter(f => rows / sec < f / 3.0)
             .map(f => s"$k: ${(rows / sec).toLong} rows/s < floor $f / 3")
         }
         require(bad.isEmpty,

@@ -38,4 +38,36 @@ class SnapshotCacheSpec extends SparkSpec {
     // immutability, documented in T.dirFingerprint
     assert(T.dirFingerprint("/graft-no-such-dir") == "nonlocal")
   }
+
+  test("tbl re-infers the schema of a table rewritten in place") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-schemafp").toString
+    spark.range(3).write.mode("overwrite").parquet(s"$tmp/t.parquet")
+    assert(T.tbl(spark, tmp, "t").columns.toSeq == Seq("id"))
+    Thread.sleep(5) // ensure mtime can differ even on coarse clocks
+    spark.range(3).select(col("id"), col("id").cast("string").as("extra"))
+      .write.mode("overwrite").parquet(s"$tmp/t.parquet")
+    val df = T.tbl(spark, tmp, "t")
+    assert(df.columns.toSeq == Seq("id", "extra"),
+      "rewritten table must be read with its new schema")
+    assert(df.orderBy("id").collect().map(_.getString(1)).toSeq == Seq("0", "1", "2"))
+  }
+
+  test("tbl returns the same schema from the memo as from its inferring call") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-schemamemo").toString
+    val tables = Seq("region", "nation", "customer", "supplier", "part",
+      "orders", "lineitem", "events", "documents", "embeddings")
+    // a private copy of the (single-file) testdata tables, so the
+    // first call here is the inferring one
+    tables.foreach(t => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(sfDir, s"$t.parquet"),
+      java.nio.file.Paths.get(tmp, s"$t.parquet")))
+    tables.foreach { t =>
+      val first = T.tbl(spark, tmp, t).schema
+      assert(T.tbl(spark, tmp, t).schema == first, s"$t: cached schema differs")
+      // reading with the given schema keeps the inferred nullability
+      assert(first.map(f => f.name -> f.nullable) ==
+        spark.read.parquet(s"$tmp/$t.parquet").schema.map(f => f.name -> f.nullable),
+        s"$t: nullability differs from a plain inferring read")
+    }
+  }
 }

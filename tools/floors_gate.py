@@ -16,8 +16,10 @@ against its best-known quiet minimum in tools/floors.json instead:
                 query enters at its first reading
 
   --cores      CoresBench's numbers (keys "cores:"), same rule, no retry
-  --stream     StreamBench's per-path rows/s (keys "stream:"), inverted
-               sense: a regression is a reading below floor/3
+  --stream     StreamBench's per-path rows/s, inverted sense: a
+               regression is a reading below floor/3. Keyed by the
+               run's core count (stream_key): "stream:<path>" at 32
+               cores, "stream@<n>:<path>" at any other n
 
 Usage: floors_gate.py <bench_json> [--no-retry]
        floors_gate.py --cores <cores_json>
@@ -83,6 +85,19 @@ def gate(readings, higher_is_better=False, ndigits=3, retime=None):
             "floors_updated": updated}
 
 
+# Core count of the "stream:<path>" floors, and of StreamBench JSON
+# written before it recorded its "cores".
+STREAM_FLOOR_CORES = 32
+
+
+def stream_key(cores, path):
+    """floors.json key of a StreamBench path's rows/s floor at `cores`
+    session cores; StreamBench.floorKey is the same rule."""
+    if cores == STREAM_FLOOR_CORES:
+        return f"stream:{path}"
+    return f"stream@{cores}:{path}"
+
+
 def bench_one(names):
     """Re-times `names` in ONE extra JVM via graft.BenchOne (min-of-5,
     an independent clock window); returns {query: seconds}."""
@@ -119,7 +134,8 @@ def main() -> None:
         # applies the same check in-process (fails loudly unless
         # SPARK_GRAFT_STREAM_NOGATE=1); this mode does the ratchet +
         # report leg so judge.sh reads one format for every gate.
-        report = gate({f"stream:{k}": v["rows_per_sec"]
+        cores = data.get("cores", STREAM_FLOOR_CORES)
+        report = gate({stream_key(cores, k): v["rows_per_sec"]
                        for k, v in data["paths"].items()},
                       higher_is_better=True, ndigits=1)
     else:
