@@ -1,7 +1,8 @@
 package graft.book
 
-import graft.streaming.DepthRecord
+import graft.streaming.{BookSynchronizer, Pipelines}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Top-of-book row emitted after applying one depth record. Prices
@@ -18,11 +19,23 @@ final case class TopOfBook(
     bid_levels: Int,
     ask_levels: Int)
 
+/** A [[graft.streaming.DepthRecord]] with its level text parsed
+  * ([[graft.streaming.Pipelines.levels]]): what the book folds. */
+final case class BookUpdate(
+    timestamp: Long,
+    local_timestamp: Long,
+    first_update_id: Long,
+    last_update_id: Long,
+    bids: Seq[Seq[String]],
+    asks: Seq[Seq[String]],
+    is_snapshot: Boolean)
+
 /** Continuous order-book maintenance: the real-time analytic the
   * recorded data exists for. Consumes the post-sync depth-record
   * stream (snapshot replay first, then contiguous deltas — exactly
-  * [[graft.streaming.BookSynchronizer]]'s output contract), folds
-  * each record's levels into keyed book state (qty 0 removes a
+  * [[graft.streaming.BookSynchronizer]]'s output contract), parses
+  * each record's level text as [[graft.streaming.Pipelines.depthRows]]
+  * does, folds the levels into keyed book state (qty 0 removes a
   * level), and emits one top-of-book row per applied record.
   *
   * State is two price→qty maps per (symbol, market) — bounded by the
@@ -84,7 +97,7 @@ object StreamingBook {
   }
 
   /** Pure per-record step: fold the update into the book, emit ToB. */
-  def step(st: BookState, ev: DepthRecord): (BookState, TopOfBook) = {
+  def step(st: BookState, ev: BookUpdate): (BookState, TopOfBook) = {
     val st2 = BookState(
       applyLevels(st.bids, ev.bids),
       applyLevels(st.asks, ev.asks))
@@ -113,11 +126,13 @@ object StreamingBook {
   def topOfBookStream(records: DataFrame, market: String, symbol: String): DataFrame = {
     val spark = records.sparkSession
     import spark.implicits._
-    records.as[DepthRecord]
-      .groupByKey(_ => s"$symbol.$market")
+    val parsed = records
+      .withColumn("bids", Pipelines.levels(col("bids")))
+      .withColumn("asks", Pipelines.levels(col("asks")))
+    BookSynchronizer.bySymbol[BookUpdate](parsed, market, symbol)
       .flatMapGroupsWithState[BookState, TopOfBook](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, events: Iterator[DepthRecord], state: GroupState[BookState]) =>
+        (_: String, events: Iterator[BookUpdate], state: GroupState[BookState]) =>
           var st = state.getOption.getOrElse(BookState(Map.empty, Map.empty))
           // Recover the synchronizer's emission order after the shuffle:
           // snapshot first (it may carry a LOWER update id than a wide

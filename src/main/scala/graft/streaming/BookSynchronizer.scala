@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, KeyValueGroupedDataset}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** The reference's order-book synchronization state machine
@@ -93,7 +94,7 @@ object SyncLogic {
         // message once more (the reference's fall-through double-save)
         val snapTs = ev.local_timestamp - 1 // spot_depth_etl.py:116
         val snapRec = DepthRecord(snapTs, snapTs, lastId, lastId,
-          snapshot.bids, snapshot.asks, is_snapshot = true)
+          snapshot.bidsJson, snapshot.asksJson, is_snapshot = true)
         (tracked.copy(synced = true, buffered = 0L),
           List(snapRec, ev, ev))
       } else {
@@ -126,7 +127,14 @@ object BookSynchronizer {
 
   /** Wraps [[SyncLogic]] as a streaming stateful operator over the
     * output of [[Pipelines.depthRecords]]. Works identically on batch
-    * frames (state is then per-invocation), which the tests use. */
+    * frames (state is then per-invocation), which the tests use.
+    *
+    * The operator reads only the ids: levels cross it as the wire's
+    * JSON text (the snapshot row's rendered once,
+    * [[BookSnapshot.levelsJson]]), so the shuffle and the state
+    * function's encoder move two strings per row, not nested arrays.
+    * Parse after it: [[Pipelines.depthRows]] or
+    * [[graft.book.StreamingBook.topOfBookStream]]. */
   def apply(
       records: DataFrame,
       market: String,
@@ -134,8 +142,7 @@ object BookSynchronizer {
       snapshot: BookSnapshot): DataFrame = {
     val spark = records.sparkSession
     import spark.implicits._
-    records.as[DepthRecord]
-      .groupByKey(_ => s"$symbol.$market")
+    bySymbol[DepthRecord](records, market, symbol)
       .flatMapGroupsWithState[SyncLogic.SyncState, DepthRecord](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: String, events: Iterator[DepthRecord],
@@ -148,4 +155,15 @@ object BookSynchronizer {
       }
       .toDF()
   }
+
+  /** One state group per (symbol, market), keyed by a literal column:
+    * the state operator deserializes each row once, where a
+    * `groupByKey` closure adds an `AppendColumns` that deserializes it
+    * first. The key column keeps `groupByKey`'s name and type
+    * (`value: string`), so checkpoints of either resume under the
+    * other. */
+  private[graft] def bySymbol[T: Encoder](records: DataFrame, market: String,
+      symbol: String): KeyValueGroupedDataset[String, T] =
+    records.groupBy(lit(s"$symbol.$market").as("value"))
+      .as[String, T](Encoders.STRING, implicitly[Encoder[T]])
 }

@@ -1,11 +1,12 @@
 package graft.streaming
 
-import java.io.FileOutputStream
+import java.io.{ByteArrayOutputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 
 /** The reference's CSV storage contract (storage.py:47-82; SURVEY.md
   * §2.1 #16): one file per (symbol, market, kind) named
@@ -15,8 +16,10 @@ import org.apache.spark.sql.functions.col
   *
   * This single-file append layout is inherently driver-side I/O — it
   * exists for byte-layout parity with the reference. A batch is one
-  * job whose tasks render CSV bytes, appended in partition order: the
-  * driver holds one batch's bytes (≈ 1.4 MB per 1000 depth messages),
+  * job whose tasks render CSV bytes straight from the frame's
+  * `InternalRow`s (no external `Row` per line), appended
+  * in partition order: the driver holds one batch's bytes (≈ 1.4 MB
+  * per 1000 depth messages, in chunks of about 128 KB),
   * bounded by the source's per-trigger admission like the reference's
   * `batch_size` buffer (storage.py:24-36). The scale path swaps in
   * Spark's partitioned csv/parquet sink; nothing upstream changes.
@@ -64,7 +67,8 @@ final class CsvAppendSink(
 
   /** foreachBatch body. Header iff nothing written yet (storage.py:
     * 67-68, 74-75); replayed batches (batchId already recorded) are
-    * skipped.
+    * skipped. `df` must have exactly `columns`, in order (the header's
+    * order); any other frame fails the batch.
     *
     * Flush-cadence deviation from the reference (deliberate):
     * storage.py:24-36 buffers OUTPUT rows and flushes only when
@@ -91,14 +95,17 @@ final class CsvAppendSink(
     }
     // ONE action over every partition, empty ones included: a second
     // re-runs the stateful lineage, a skipped one fails (see above).
-    val rows = df.select(columns.map(col): _*).rdd
-    val parts = df.sparkSession.sparkContext.runJob(rows, CsvAppendSink.renderRows _)
+    require(df.columns.toSeq == columns,
+      s"$kind CSV expects columns ${columns.mkString(",")}, got ${df.columns.mkString(",")}")
+    val types = df.schema.fields.map(_.dataType)
+    val parts = df.sparkSession.sparkContext.runJob(df.queryExecution.toRdd,
+      (rows: Iterator[InternalRow]) => CsvAppendSink.render(rows, types))
     if (parts.forall(_.isEmpty)) return
     val out = new FileOutputStream(path.toFile, true)
     try {
       if (Files.size(path) == 0L)
         out.write((columns.mkString(",") + System.lineSeparator).getBytes(UTF_8))
-      parts.foreach(out.write)
+      parts.foreach(_.foreach(out.write))
     } finally out.close()
     // atomic sidecar update (no torn reads on crash mid-write)
     val tmp = batchIdPath.resolveSibling(batchIdPath.getFileName.toString + ".tmp")
@@ -111,21 +118,47 @@ final class CsvAppendSink(
 }
 
 object CsvAppendSink {
-  private def render(v: Any): String = v match {
-    case null => ""
-    // Python bool capitalization: the reference persists rows via
-    // pandas DataFrame.to_csv (storage.py:60-66), which renders bools
-    // as 'True'/'False' — so depth's is_snapshot column must too.
-    case b: Boolean => if (b) "True" else "False"
-    case other => other.toString
-  }
+  private val True = "True".getBytes(UTF_8)
+  private val False = "False".getBytes(UTF_8)
+
+  /** Lines are cut into chunks of about this many bytes: below G1's
+    * humongous-object threshold (half a region, 512 KB at the smallest
+    * region size), so a batch's rendered bytes never take whole
+    * regions that only a young collection frees. */
+  private val ChunkBytes = 128 * 1024
 
   /** A partition's rows as CSV lines in explicit UTF-8 (the platform
-    * charset may differ). Runs in the task, so it must not touch a sink. */
-  def renderRows(rows: Iterator[Row]): Array[Byte] = {
-    val sb = new StringBuilder
-    rows.foreach(_.toSeq.map(render).addString(sb, "", ",", System.lineSeparator))
-    sb.toString.getBytes(UTF_8)
+    * charset may differ), read from Spark's internal rows: strings are
+    * copied as their UTF-8 bytes, null is an empty field, and every
+    * other value prints as its external (`Row`) value's `toString`.
+    * Returned as consecutive chunks of whole lines ([[ChunkBytes]]).
+    * Runs in the task, so it must not touch a sink. */
+  def render(rows: Iterator[InternalRow], types: Array[DataType]): Array[Array[Byte]] = {
+    val toScala = types.map(CatalystTypeConverters.createToScalaConverter)
+    val nl = System.lineSeparator.getBytes(UTF_8)
+    val chunks = Array.newBuilder[Array[Byte]]
+    // starts small (an empty partition allocates little) and grows to
+    // at most 2 * ChunkBytes, still below the humongous threshold
+    val out = new ByteArrayOutputStream(ChunkBytes / 4)
+    rows.foreach { row =>
+      var i = 0
+      while (i < types.length) {
+        if (i > 0) out.write(',')
+        if (!row.isNullAt(i)) types(i) match {
+          case _: StringType => row.getUTF8String(i).writeTo(out)
+          // Python bool capitalization: the reference persists rows via
+          // pandas DataFrame.to_csv (storage.py:60-66), which renders
+          // bools as 'True'/'False' — so depth's is_snapshot must too.
+          case BooleanType => out.write(if (row.getBoolean(i)) True else False)
+          case t => out.write(toScala(i)(row.get(i, t)).toString.getBytes(UTF_8))
+        }
+        i += 1
+      }
+      out.write(nl)
+      if (out.size >= ChunkBytes) { chunks += out.toByteArray; out.reset() }
+    }
+    if (out.size > 0) chunks += out.toByteArray
+    chunks.result()
   }
 
   /** Column orders are the reference's dict insertion orders

@@ -77,7 +77,9 @@ object DeadLetter {
   * [[Pipelines.ViolationCol]] — and lands in-contract rows and
   * labeled verbatim raw lines in separate sinks with the same
   * accounting invariant as s20: valid + quarantined = every
-  * type-matching message, idempotent under batch replay. */
+  * type-matching message, idempotent under batch replay. Depth good
+  * rows keep `bids`/`asks` as the wire's level text (strings, not
+  * nested arrays; [[Pipelines.levels]] parses them). */
 object ContractGate {
 
   /** Split a violation-stamped frame into (valid, quarantine): valid

@@ -22,14 +22,21 @@ final case class TradeRow(
 
 /** Pre-explosion depth record (spot_depth_etl.py:66-73). The
   * reference drops U/u after sequencing; we keep them — they make the
-  * consistency check expressible as a query (SURVEY §1.2). */
+  * consistency check expressible as a query (SURVEY §1.2).
+  *
+  * `bids`/`asks` are the wire's JSON text of each side's level array,
+  * as `json_tuple` yields it: the book sync reads only the ids, so the
+  * levels cross it unparsed and are parsed once, after it, on the rows
+  * it admits ([[Pipelines.depthRows]], [[graft.book.StreamingBook]]).
+  * A side that is present but malformed stays text here and parses to
+  * null there. */
 final case class DepthRecord(
     timestamp: Long,
     local_timestamp: Long,
     first_update_id: Long,
     last_update_id: Long,
-    bids: Seq[Seq[String]],
-    asks: Seq[Seq[String]],
+    bids: String,
+    asks: String,
     is_snapshot: Boolean)
 
 /** Output row of the depth_updates table (README.md:50-61). */
@@ -49,7 +56,32 @@ final case class DepthRow(
 final case class BookSnapshot(
     lastUpdateId: Long,
     bids: Seq[Seq[String]],
-    asks: Seq[Seq[String]])
+    asks: Seq[Seq[String]]) {
+  /** The levels as the JSON text a depth message carries, rendered
+    * once: the book sync's snapshot row is a [[DepthRecord]] too. */
+  lazy val bidsJson: String = BookSnapshot.levelsJson(bids)
+  lazy val asksJson: String = BookSnapshot.levelsJson(asks)
+}
+
+object BookSnapshot {
+  private val json = new com.fasterxml.jackson.core.JsonFactory()
+
+  /** `[["p","q"],...]` with Jackson's string escaping, so that
+    * `from_json` of the text gives `levels` back; a null level or
+    * string is written as JSON null. */
+  def levelsJson(levels: Seq[Seq[String]]): String = {
+    val w = new java.io.StringWriter
+    val g = json.createGenerator(w)
+    g.writeStartArray()
+    levels.foreach { lvl =>
+      if (lvl == null) g.writeNull()
+      else { g.writeStartArray(); lvl.foreach(g.writeString); g.writeEndArray() }
+    }
+    g.writeEndArray()
+    g.close()
+    w.toString
+  }
+}
 
 // NOTE: there is deliberately NO from_json StructType for the wire
 // messages — Binance's field pairs (e/E, U/u, t/T, m/M) collide under

@@ -25,6 +25,11 @@ object Pipelines {
 
   private val levelsSchema = ArrayType(ArrayType(StringType))
 
+  /** A side's level array parsed from its JSON text (a
+    * [[DepthRecord]]'s `bids`/`asks`); text that is not an array of
+    * arrays parses to null. */
+  private[graft] def levels(json: Column): Column = from_json(json, levelsSchema)
+
   /** Violation label stamped by the gated parsers: NULL for
     * in-contract rows, a reason string otherwise. The s20
     * [[ContractGate]] splits on it. */
@@ -91,7 +96,14 @@ object Pipelines {
     * "ts_out_of_contract", "bad_update_id" for non-numeric U/u, which
     * would otherwise kill the typed book-sync operator). Live updates
     * carry is_snapshot=false; snapshot replay rows are emitted by the
-    * book synchronizer. */
+    * book synchronizer.
+    *
+    * Only the ids and the event time are parsed here: `bids`/`asks`
+    * stay the JSON text `json_tuple` yields (a missing side is still
+    * labelled "missing_field"; a present but malformed one is not a
+    * violation and parses to null in [[depthRows]]). So the
+    * [[ContractGate]]'s good-rows parquet stores each side as that
+    * text. */
   def depthRecordsGated(raw: DataFrame): DataFrame =
     raw
       .select(
@@ -110,8 +122,8 @@ object Pipelines {
         col("local_timestamp"),
         col("fu").try_cast("long").as("first_update_id"),
         col("lu").try_cast("long").as("last_update_id"),
-        from_json(col("bjson"), levelsSchema).as("bids"),
-        from_json(col("ajson"), levelsSchema).as("asks"),
+        col("bjson").as("bids"),
+        col("ajson").as("asks"),
         lit(false).as("is_snapshot"),
         col("value"), col(ViolationCol))
 
@@ -129,7 +141,7 @@ object Pipelines {
       x.getItem(0).as("price"),
       x.getItem(1).as("quantity")))
 
-  /** depth path, explode stage: bids/asks arrays → one row per level
+  /** depth path, explode stage: bids/asks text → [[levels]] → one row per level
     * with literal side, in the reference's emission order — its
     * per-message stable sort_values(['timestamp','side'])
     * (spot_depth_etl.py:92-111) puts asks ('ask' < 'bid') before bids
@@ -139,13 +151,15 @@ object Pipelines {
     * shuffle-free, streaming-legal (a global sort would be neither),
     * and a single Generate instead of union + sort.
     * `quantity == "0..."` rows are KEPT (level removal is data).
-    * Output columns = DepthRow. */
+    * Runs after the book sync, so only admitted records are parsed; a
+    * side that parses to null drops its whole message (the concat is
+    * null). Output columns = DepthRow. */
   def depthRows(records: DataFrame): DataFrame =
     records.select(
       col("timestamp"), col("local_timestamp"),
       explode(concat(
-        sideStructs(col("asks"), "ask"),
-        sideStructs(col("bids"), "bid"))).as("lvl"),
+        sideStructs(levels(col("asks")), "ask"),
+        sideStructs(levels(col("bids")), "bid"))).as("lvl"),
       col("is_snapshot"))
       .select(col("timestamp"), col("local_timestamp"),
         col("lvl.side").as("side"),

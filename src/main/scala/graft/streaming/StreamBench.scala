@@ -198,12 +198,13 @@ object StreamBench {
       case _ =>
         val synced = BookSynchronizer.apply(
           Pipelines.depthRecords(raw), id.market, id.symbol, snapshot(levels))
-        // A/B lever (round-11 judge task 4): the per-symbol serial
-        // state fold and the downstream explode/union/sink currently
-        // ride ONE task; `decouple` inserts a shuffle after the state
-        // machine so the fold task ships slim DepthRecord rows and the
-        // 6x-wider exploded level rows are built and written by
-        // parallel post-shuffle tasks. Whether that buys intra-symbol
+        // A/B lever: the per-symbol serial state fold and the
+        // downstream level parse/explode/sink currently ride ONE task;
+        // `decouple` inserts a shuffle after the state machine so the
+        // fold task ships DepthRecord rows (ids plus each side's level
+        // text, unparsed) and the level parse and the 6x-wider
+        // exploded level rows are done and written by parallel
+        // post-shuffle tasks. Whether that buys intra-symbol
         // throughput (vs the shuffle's serialization tax) is exactly
         // what the depth_parquet_decoupled row measures.
         Pipelines.depthRows(

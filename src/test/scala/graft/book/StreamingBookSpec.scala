@@ -70,9 +70,9 @@ class StreamingBookSpec extends SparkSpec {
     // newer delta (u=110) stamped EARLIER wall-clock than older (u=105):
     // the book must apply id order, so price 100.0 ends at the newer qty
     val older = DepthRecord(10L, 995L, 101L, 105L,
-      bids = Seq(Seq("100.0", "5.0")), asks = Seq.empty, is_snapshot = false)
+      bids = """[["100.0","5.0"]]""", asks = "[]", is_snapshot = false)
     val newer = DepthRecord(11L, 990L, 106L, 110L,
-      bids = Seq(Seq("100.0", "2.0")), asks = Seq.empty, is_snapshot = false)
+      bids = """[["100.0","2.0"]]""", asks = "[]", is_snapshot = false)
     import spark.implicits._
     val out = StreamingBook.topOfBookStream(
       Seq(newer, older).toDF(), "spot", "bnbusdt").collect()
@@ -81,7 +81,7 @@ class StreamingBookSpec extends SparkSpec {
 
   test("corrupt level arrays are dropped, not fatal (warn-and-drop parity)") {
     val st0 = StreamingBook.BookState(Map.empty, Map.empty)
-    val rec = DepthRecord(1L, 2L, 10L, 11L,
+    val rec = BookUpdate(1L, 2L, 10L, 11L,
       bids = Seq(Seq("100.0", "1.0"), Seq("101.0"), null, Seq(null, "2.0")),
       asks = null, is_snapshot = false)
     val (st1, tob) = StreamingBook.step(st0, rec)
@@ -91,7 +91,7 @@ class StreamingBookSpec extends SparkSpec {
 
   test("pure step removes emptied levels and handles one-sided books") {
     val st0 = StreamingBook.BookState(Map.empty, Map.empty)
-    val rec = DepthRecord(1L, 2L, 10L, 11L,
+    val rec = BookUpdate(1L, 2L, 10L, 11L,
       bids = Seq(Seq("100.0", "1.0")), asks = Seq.empty, is_snapshot = false)
     val (st1, tob1) = StreamingBook.step(st0, rec)
     assert(tob1.best_bid == "100.0" && tob1.best_ask == "" && tob1.spread == "")

@@ -126,4 +126,30 @@ class CheckpointFileManagerSpec extends SparkSpec {
     val reference = Files.readAllBytes(refOut.resolve("bnbusdt.spot.depth.csv"))
     assert(new String(resumed, "UTF-8") == new String(reference, "UTF-8"))
   }
+
+  /** Copies the test resource tree `name` into a fresh directory. */
+  private def resourceCopy(name: String): NioPath = {
+    val from = java.nio.file.Paths.get(getClass.getResource(name).toURI)
+    val to = tmp("ckfmres")
+    Files.walk(from).iterator.asScala.foreach { p =>
+      val dst = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(dst) else Files.copy(p, dst)
+    }
+    to
+  }
+
+  test("a checkpoint written when the sync carried parsed levels resumes byte-identically") {
+    // written by the code that parsed bids/asks before the book sync:
+    // the first 4 lines of the tape at 2 a batch, its CSV and sidecar
+    val old = resourceCopy("/graft/streaming/nested-levels-checkpoint")
+    val fixtures = tmp("ckfmfix")
+    writeTape(fixtures, depthTape)
+    assert(drain(spark, fixtures, old.resolve("csv"), old.resolve("checkpoint"), fresh = false) == 3)
+    val resumed = Files.readAllBytes(old.resolve("csv").resolve("bnbusdt.spot.depth.csv"))
+
+    val refOut = tmp("ckfmref")
+    assert(drain(spark, fixtures, refOut, tmp("ckfmrefckpt"), fresh = true) == 5)
+    val reference = Files.readAllBytes(refOut.resolve("bnbusdt.spot.depth.csv"))
+    assert(new String(resumed, "UTF-8") == new String(reference, "UTF-8"))
+  }
 }

@@ -24,8 +24,8 @@ class SyncLogicPropSpec extends AnyFunSuite {
       local_timestamp = 2000L + i,
       first_update_id = firstU,
       last_update_id = lastU,
-      bids = Seq(Seq(s"100.$i", "1.0")),
-      asks = Seq(Seq(s"101.$i", "2.0")),
+      bids = s"""[["100.$i","1.0"]]""",
+      asks = s"""[["101.$i","2.0"]]""",
       is_snapshot = false)
 
   private case class Scenario(
@@ -123,7 +123,7 @@ class SyncLogicPropSpec extends AnyFunSuite {
             .foreach { b =>
               buffered = buffered.filter(_.first_update_id >= b.first_update_id)
               val ts = m.local_timestamp - 1
-              out += DepthRecord(ts, ts, l, l, snap.bids, snap.asks,
+              out += DepthRecord(ts, ts, l, l, snap.bidsJson, snap.asksJson,
                 is_snapshot = true)
               out ++= buffered
               out += m // fall-through double-save of the completer
