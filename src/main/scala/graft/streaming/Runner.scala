@@ -39,30 +39,13 @@ final case class StreamConfig(
     sinkFormat: String = "csv")
 
 /** Message source abstraction — the reference's websocket client slot
-  * (base.py:26). The zero-egress build ships a file-replay
-  * implementation; a websocket DSv2 source drops into the same trait.
+  * (base.py:26). The zero-egress build ships a file-replay implementation
+  * ([[source.Dsv2ReplaySource]]); a websocket DSv2 source drops in too.
   * Contract: a streaming frame with `value: string` (raw JSON) and
   * `local_timestamp: long` (arrival ms — §2.1 #4 arrival enrichment).
   */
 trait EventSource {
   def stream(spark: SparkSession, id: EventId): DataFrame
-}
-
-/** Replays JSONL fixture files as a stream: one file/directory per
-  * event id at `{fixtureRoot}/{symbol}.{market}.{eventType}/`. A fixed
-  * arrival timestamp makes tests deterministic; None stamps wall
-  * clock like the reference (base.py:52). */
-final class FileReplaySource(
-    fixtureRoot: String,
-    fixedArrivalMs: Option[Long] = None) extends EventSource {
-  override def stream(spark: SparkSession, id: EventId): DataFrame = {
-    val dir = s"$fixtureRoot/${id.symbol}.${id.market}.${id.eventType}"
-    val raw = spark.readStream.text(dir)
-    val ts = fixedArrivalMs
-      .map(lit(_))
-      .getOrElse(unix_millis(current_timestamp()))
-    raw.withColumn("local_timestamp", ts)
-  }
 }
 
 /** Multi-stream fan-out + lifecycle (main.py:12-33, factory.py:9-30;

@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.Trigger
   * `Trigger.AvailableNow` over a DETERMINISTIC generated JSONL corpus
   * (index-arithmetic fields, no RNG — identical bytes every run):
   *
-  *   - trade path:  FileReplaySource → Pipelines.trades → sink
-  *   - depth path:  FileReplaySource → Pipelines.depthRecords →
+  *   - trade path:  Dsv2ReplaySource → Pipelines.trades → sink
+  *   - depth path:  Dsv2ReplaySource → Pipelines.depthRecords →
   *                  BookSynchronizer (contiguous-id tape, one symbol
   *                  group — the reference's serial state machine) →
   *                  Pipelines.depthRows → sink
@@ -190,7 +190,7 @@ object StreamBench {
       corpus: Path, path: String, sink: String, levels: Int,
       decouple: Boolean = false): (Double, Long) = {
     val work = Files.createTempDirectory(s"sb-$path-$sink")
-    val src = new FileReplaySource(corpus.toString, Some(ArrivalMs))
+    val src = new source.Dsv2ReplaySource(corpus.toString, fixedArrivalMs = Some(ArrivalMs))
     val id = EventId.parse(s"binance.spot.BTCUSDT.$path")
     val raw = src.stream(spark, id)
     val rows = path match {
@@ -257,7 +257,7 @@ object StreamBench {
     val work = Files.createTempDirectory("sb-depth-multi")
     val t0 = System.nanoTime()
     val outDirs = multiSyms(nSyms).map { sym =>
-      val src = new FileReplaySource(corpus.toString, Some(ArrivalMs))
+      val src = new source.Dsv2ReplaySource(corpus.toString, fixedArrivalMs = Some(ArrivalMs))
       val id = EventId.parse(s"binance.spot.$sym.depth")
       val rows = Pipelines.depthRows(BookSynchronizer.apply(
         Pipelines.depthRecords(src.stream(spark, id)),

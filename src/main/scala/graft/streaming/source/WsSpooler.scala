@@ -15,18 +15,17 @@ import scala.jdk.CollectionConverters._
   * A push socket cannot BE a Spark scan, so the live path splits at
   * the same seam production pipelines use (ws → durable buffer →
   * engine): WsSpooler is the tiny ingestion daemon that turns the push
-  * stream into micro-batch files, and the existing streaming sources
-  * ([[FileReplaySource]] / [[Dsv2ReplaySource]]) consume them — the
-  * whole downstream pipeline (parse, validate, book-sync, sinks) is
-  * IDENTICAL for live and replay, which is what makes the replay tests
-  * meaningful for the live path.
+  * stream into micro-batch files, and [[Dsv2ReplaySource]] follows the
+  * spool directory as it grows — the whole downstream pipeline (parse,
+  * validate, book-sync, sinks) is IDENTICAL for live and replay, which
+  * is what makes the replay tests meaningful for the live path.
   *
   * Mechanics: complete text frames (partial frames are reassembled per
   * the websocket protocol) buffer in memory and flush every
   * `flushEvery` messages — the reference's count-based batching,
   * `config.json:10` batch_size — as sequentially-numbered jsonl files,
-  * written to a hidden temp name and ATOMICALLY renamed so the file
-  * stream source never observes a partial file. `stop()` flushes the
+  * written to a hidden temp name and ATOMICALLY renamed so the replay
+  * source never observes a partial file. `stop()` flushes the
   * remainder.
   *
   * The binance endpoint itself (`wss://stream.binance.com:9443/ws/...`,
@@ -77,9 +76,8 @@ final class WsSpooler(
     if (buf.size >= flushEvery) flush()
   }
 
-  /** Writes buffered messages as the next spool file (atomic rename —
-    * a `.`-prefixed temp name is also invisible to Spark's file
-    * listing, a second line of defense). */
+  /** Writes buffered messages as the next spool file, by atomic rename
+    * from a `.`-prefixed temp name that the replay source also skips. */
   def flush(): Unit = synchronized {
     if (buf.nonEmpty) {
       val n = fileSeq.getAndIncrement()

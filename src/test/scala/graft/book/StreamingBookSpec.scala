@@ -3,6 +3,7 @@ package graft.book
 import java.nio.file.{Files, Path}
 
 import graft.SparkSpec
+import graft.streaming.source.Dsv2ReplaySource
 import graft.streaming._
 
 import scala.jdk.CollectionConverters._
@@ -26,7 +27,7 @@ class StreamingBookSpec extends SparkSpec {
     val snapshot = BookSnapshot(158,
       bids = Seq(Seq("570.90000000", "3.10000000"), Seq("570.80000000", "5.00000000")),
       asks = Seq(Seq("571.10000000", "1.20000000")))
-    val source = new FileReplaySource(fixtures.toString, fixedArrivalMs = Some(1727784001000L))
+    val source = new Dsv2ReplaySource(fixtures.toString, fixedArrivalMs = Some(1727784001000L))
     val raw = source.stream(spark, EventId.parse("binance.spot.bnbusdt.depth"))
     val synced = BookSynchronizer(
       Pipelines.depthRecords(raw), "spot", "bnbusdt", snapshot)

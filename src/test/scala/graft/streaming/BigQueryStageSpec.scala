@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Path}
 
 import graft.SparkSpec
+import graft.streaming.source.Dsv2ReplaySource
 import graft.sinks.BigQueryStage
 
 import scala.jdk.CollectionConverters._
@@ -28,7 +29,7 @@ class BigQueryStageSpec extends SparkSpec {
     val dir = fixtures.resolve("bnbusdt.spot.trade")
     Files.createDirectories(dir)
     Files.write(dir.resolve("messages.jsonl"), lines.asJava)
-    val source = new FileReplaySource(fixtures.toString,
+    val source = new Dsv2ReplaySource(fixtures.toString,
       fixedArrivalMs = Some(base))
     val qs = Runner.startWithSinks(spark,
       StreamConfig(Seq("binance.spot.bnbusdt.trade"), out.toString,

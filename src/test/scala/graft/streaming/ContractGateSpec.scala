@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Path}
 
 import graft.SparkSpec
+import graft.streaming.source.Dsv2ReplaySource
 
 import scala.jdk.CollectionConverters._
 
@@ -38,7 +39,7 @@ class ContractGateSpec extends SparkSpec {
       trade("1700000000003", 3L, "99.7"))
     Files.write(dir.resolve("replay.jsonl"), lines.asJava)
 
-    val source = new FileReplaySource(root.toString, Some(42L))
+    val source = new Dsv2ReplaySource(root.toString, fixedArrivalMs = Some(42L))
     val gated = Pipelines.tradesGated(
       source.stream(spark, EventId.parse("binance.spot.BTCUSDT.trade")))
     val goodDir = tmp("cg-good").toString + "/rows"
@@ -80,7 +81,7 @@ class ContractGateSpec extends SparkSpec {
     Files.write(dir.resolve("replay.jsonl"),
       Seq(depth("1700000000001", 1, 2), negRow).asJava)
 
-    val source = new FileReplaySource(root.toString, Some(42L))
+    val source = new Dsv2ReplaySource(root.toString, fixedArrivalMs = Some(42L))
     val gated = Pipelines.depthRecordsGated(
       source.stream(spark, EventId.parse("binance.spot.BTCUSDT.depth")))
     val goodDir = tmp("cgd-good").toString + "/rows"

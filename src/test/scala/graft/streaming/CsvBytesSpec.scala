@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 
 import graft.SparkSpec
+import graft.streaming.source.Dsv2ReplaySource
 
 import scala.jdk.CollectionConverters._
 
@@ -28,7 +29,7 @@ class CsvBytesSpec extends SparkSpec {
     val out = tmp("csvbytes")
     Files.createDirectories(fixtures.resolve(dir))
     Files.write(fixtures.resolve(dir).resolve("m.jsonl"), tape.asJava)
-    val source = new FileReplaySource(fixtures.toString, fixedArrivalMs = Some(1727784001000L))
+    val source = new Dsv2ReplaySource(fixtures.toString, fixedArrivalMs = Some(1727784001000L))
     val qs = Runner.startWithSinks(spark, StreamConfig(events, out.toString), source, snaps,
       checkpointRoot = tmp("csvbytesckpt").toString)
     qs.foreach(_._1.processAllAvailable())

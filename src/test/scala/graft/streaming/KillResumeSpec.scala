@@ -92,11 +92,15 @@ class KillResumeSpec extends SparkSpec {
     catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => false }
   }
 
-  test("s05 kill between batches: resumed CSV is byte-identical to an uninterrupted run") {
+  /** Kills the s05 pipeline between two batches while only `tapes.head`
+    * is on disk, writes the other tapes (files that sort after it),
+    * resumes from the checkpoint, and returns the rows at the kill, the
+    * resumed CSV and an uninterrupted run's CSV over every tape. */
+  private def killAndResume(tapes: Seq[Seq[String]]): (Int, Seq[String], Seq[String]) = {
     val fixtures = tmp("krfix")
     val dir = fixtures.resolve("bnbusdt.spot.depth")
     Files.createDirectories(dir)
-    Files.write(dir.resolve("messages.jsonl"), depthTape.asJava)
+    Files.write(dir.resolve("messages.jsonl"), tapes.head.asJava)
 
     // killed run: retry until the stop lands cleanly between batches
     var out: Path = null
@@ -111,6 +115,9 @@ class KillResumeSpec extends SparkSpec {
     }
     assert(clean, s"no clean between-batch kill in $attempts attempts")
     val atKill = Files.readAllLines(out.resolve("bnbusdt.spot.depth.csv")).asScala.size
+    tapes.tail.zipWithIndex.foreach { case (t, i) =>
+      Files.write(dir.resolve(s"more-$i.jsonl"), t.asJava)
+    }
     runDepth(fixtures, out, ckpt)
     val resumed = Files.readAllLines(out.resolve("bnbusdt.spot.depth.csv")).asScala
 
@@ -118,6 +125,11 @@ class KillResumeSpec extends SparkSpec {
     val refOut = tmp("krref")
     runDepth(fixtures, refOut, tmp("krrefckpt"))
     val reference = Files.readAllLines(refOut.resolve("bnbusdt.spot.depth.csv")).asScala
+    (atKill, resumed.toSeq, reference.toSeq)
+  }
+
+  test("s05 kill between batches: resumed CSV is byte-identical to an uninterrupted run") {
+    val (atKill, resumed, reference) = killAndResume(Seq(depthTape))
 
     // the kill landed mid-tape (something written, something left)
     assert(atKill >= 1 && atKill < reference.size,
@@ -125,6 +137,17 @@ class KillResumeSpec extends SparkSpec {
     assert(resumed == reference,
       s"resumed CSV diverged:\nresumed=${resumed.mkString("|")}\nreference=${reference.mkString("|")}")
     assert(resumed.count(_.startsWith("timestamp,")) == 1)
+  }
+
+  test("s05 kill, files added before the resume: resumed CSV equals an uninterrupted run") {
+    val (atKill, resumed, reference) =
+      killAndResume(Seq(depthTape.take(7), depthTape.slice(7, 11), depthTape.drop(11)))
+    assert(atKill >= 1 && atKill < reference.size,
+      s"kill must land mid-tape: $atKill of ${reference.size} rows at stop")
+    assert(resumed == reference,
+      s"resumed CSV diverged:\nresumed=${resumed.mkString("|")}\nreference=${reference.mkString("|")}")
+    // header, snapshot bid and ask, the bridge twice, 12 deltas
+    assert(reference.size == 1 + 2 + 2 * 2 + 12 * 2, "every added delta is written")
   }
 
   test("s19 crash after write, before commit: replayed batch overwrites, verdicts exactly once") {

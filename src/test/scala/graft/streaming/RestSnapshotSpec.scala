@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.SparkSpec
-import graft.streaming.source.{RestSnapshotClient, WsSpooler}
+import graft.streaming.source.{Dsv2ReplaySource, RestSnapshotClient, WsSpooler}
 import io.netty.bootstrap.ServerBootstrap
 import io.netty.channel.{ChannelHandlerContext, ChannelInboundHandlerAdapter, ChannelInitializer}
 import io.netty.channel.nio.NioEventLoopGroup
@@ -168,7 +168,7 @@ class RestSnapshotSpec extends SparkSpec {
         .fetch("bnbusdt")
 
       // 3-4. the standard Runner path: sync + CSV sink
-      val source = new FileReplaySource(fixtures.toString,
+      val source = new Dsv2ReplaySource(fixtures.toString,
         fixedArrivalMs = Some(1727784001000L))
       val qs = Runner.startWithSinks(spark,
         StreamConfig(Seq("binance.spot.bnbusdt.depth"), out.toString),

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Path}
 
 import graft.SparkSpec
+import graft.streaming.source.Dsv2ReplaySource
 
 import scala.jdk.CollectionConverters._
 
@@ -27,7 +28,7 @@ class RunnerSpec extends SparkSpec {
       Files.createDirectories(dir)
       Files.write(dir.resolve("part-0.jsonl"), Seq(tradeLine).asJava)
     }
-    val source = new FileReplaySource(fixtures.toString, fixedArrivalMs = Some(1L))
+    val source = new Dsv2ReplaySource(fixtures.toString, fixedArrivalMs = Some(1L))
     val ex = intercept[Exception] {
       Runner.startWithSinks(spark, StreamConfig(events, tmp("runner-out").toString),
         source, Map.empty, checkpointRoot = tmp("runner-ckpt").toString)

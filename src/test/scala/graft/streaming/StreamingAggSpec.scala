@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Path}
 
 import graft.SparkSpec
+import graft.streaming.source.Dsv2ReplaySource
 
 import scala.jdk.CollectionConverters._
 
@@ -29,7 +30,7 @@ class StreamingAggSpec extends SparkSpec {
     val dir = fixtures.resolve("bnbusdt.spot.trade")
     Files.createDirectories(dir)
     Files.write(dir.resolve("messages.jsonl"), lines.asJava)
-    val source = new FileReplaySource(fixtures.toString, fixedArrivalMs = Some(base))
+    val source = new Dsv2ReplaySource(fixtures.toString, fixedArrivalMs = Some(base))
     val raw = source.stream(spark, EventId.parse("binance.spot.bnbusdt.trade"))
     val q = Pipelines.streamingOhlcv(Pipelines.trades(raw))
       .writeStream.format("memory").queryName("ohlcv_out")
@@ -61,7 +62,7 @@ class StreamingAggSpec extends SparkSpec {
     val dir = fixtures.resolve("bnbusdt.spot.trade") // ohlcv reads the trade tape
     Files.createDirectories(dir)
     Files.write(dir.resolve("messages.jsonl"), lines.asJava)
-    val source = new FileReplaySource(fixtures.toString, fixedArrivalMs = Some(base))
+    val source = new Dsv2ReplaySource(fixtures.toString, fixedArrivalMs = Some(base))
     val qs = Runner.startWithSinks(spark,
       StreamConfig(Seq("binance.spot.bnbusdt.ohlcv"), out.toString,
         sinkFormat = "csv"),
@@ -86,7 +87,7 @@ class StreamingAggSpec extends SparkSpec {
     val dir = fixtures.resolve("bnbusdt.spot.trade")
     Files.createDirectories(dir)
     Files.write(dir.resolve("messages.jsonl"), lines.asJava)
-    val source = new FileReplaySource(fixtures.toString, fixedArrivalMs = Some(base))
+    val source = new Dsv2ReplaySource(fixtures.toString, fixedArrivalMs = Some(base))
     val qs = Runner.startWithSinks(spark,
       StreamConfig(Seq("binance.spot.bnbusdt.ohlcv"), out.toString,
         sinkFormat = "parquet"),
@@ -106,7 +107,7 @@ class StreamingAggSpec extends SparkSpec {
     val dir = fixtures.resolve("bnbusdt.spot.trade")
     Files.createDirectories(dir)
     Files.write(dir.resolve("messages.jsonl"), lines.asJava)
-    val source = new FileReplaySource(fixtures.toString, fixedArrivalMs = Some(base))
+    val source = new Dsv2ReplaySource(fixtures.toString, fixedArrivalMs = Some(base))
     val qs = Runner.startWithSinks(spark,
       StreamConfig(Seq("binance.spot.bnbusdt.trade"), out.toString,
         sinkFormat = "parquet"),
@@ -126,7 +127,7 @@ class StreamingAggSpec extends SparkSpec {
     val dir = fixtures.resolve("bnbusdt.spot.trade")
     Files.createDirectories(dir)
     Files.write(dir.resolve("messages.jsonl"), lines.asJava)
-    val source = new FileReplaySource(fixtures.toString, fixedArrivalMs = Some(base))
+    val source = new Dsv2ReplaySource(fixtures.toString, fixedArrivalMs = Some(base))
     val qs = Runner.startWithSinks(spark,
       StreamConfig(Seq("binance.spot.bnbusdt.trade"), out.toString),
       source, Map.empty, checkpointRoot = tmp("ckpt").toString)

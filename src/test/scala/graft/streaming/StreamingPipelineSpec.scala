@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths}
 
 import graft.SparkSpec
+import graft.streaming.source.Dsv2ReplaySource
 
 import scala.jdk.CollectionConverters._
 
@@ -42,7 +43,7 @@ class StreamingPipelineSpec extends SparkSpec {
 
   private def runStreams(events: Seq[String], snaps: Map[String, BookSnapshot],
       fixtures: Path, out: Path): Seq[(org.apache.spark.sql.streaming.StreamingQuery, Option[CsvAppendSink])] = {
-    val source = new FileReplaySource(fixtures.toString, fixedArrivalMs = Some(1727784001000L))
+    val source = new Dsv2ReplaySource(fixtures.toString, fixedArrivalMs = Some(1727784001000L))
     val qs = Runner.startWithSinks(spark, StreamConfig(events, out.toString), source, snaps,
       checkpointRoot = tmp("ckpt").toString)
     qs.foreach(_._1.processAllAvailable())
@@ -118,7 +119,7 @@ class StreamingPipelineSpec extends SparkSpec {
     writeFixture(fixtures, "bnbusdt.spot.depth", Seq(
       """{"e":"depthUpdate","E":1,"s":"BNBUSDT","U":156,"u":159,"b":[["1","1"]],"a":[]}""",
       """{"e":"depthUpdate","E":2,"s":"BNBUSDT","U":165,"u":170,"b":[["2","1"]],"a":[]}"""))
-    val source = new FileReplaySource(fixtures.toString, fixedArrivalMs = Some(1000L))
+    val source = new Dsv2ReplaySource(fixtures.toString, fixedArrivalMs = Some(1000L))
     val qs = Runner.startWithSinks(spark, StreamConfig(Seq("binance.spot.bnbusdt.depth"), out.toString),
       source, Map("bnbusdt.spot" -> snapshot), checkpointRoot = tmp("ckpt").toString)
     val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -149,7 +150,7 @@ class StreamingPipelineSpec extends SparkSpec {
     writeFixture(fixtures, "bnbusdt.spot.trade", Seq(
       dup, dup, // exact duplicate delivery
       """{"e":"trade","E":1727784000456,"s":"BNBUSDT","t":88123002,"p":"571.20000000","q":"1.00000000","T":1727784000450,"m":true,"M":true}"""))
-    val source = new FileReplaySource(fixtures.toString, fixedArrivalMs = Some(1727784001000L))
+    val source = new Dsv2ReplaySource(fixtures.toString, fixedArrivalMs = Some(1727784001000L))
     val raw = source.stream(spark, EventId.parse("binance.spot.bnbusdt.trade"))
     val q = Pipelines.dedupedTrades(Pipelines.trades(raw))
       .writeStream.format("memory").queryName("dedup_out")

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
-import graft.streaming.source.WsSpooler
+import graft.streaming.source.{Dsv2ReplaySource, WsSpooler}
 import io.netty.bootstrap.ServerBootstrap
 import io.netty.channel.{ChannelHandlerContext, ChannelInboundHandlerAdapter, ChannelInitializer}
 import io.netty.channel.nio.NioEventLoopGroup
@@ -25,13 +25,14 @@ class WsSpoolerSpec extends SparkSpec {
 
   private def tmp(p: String): Path = Files.createTempDirectory(p)
 
-  private val tradeLines = (1 to 7).map { i =>
+  private def tradeLine(i: Int): String =
     s"""{"e":"trade","E":${1727784000000L + i},"s":"BNBUSDT","t":$i,"p":"571.${i}0000000","q":"1.00000000","T":${1727784000000L + i},"m":false,"M":true}"""
-  }
+
+  private val tradeLines = (1 to 7).map(tradeLine)
 
   /** Minimal websocket server: on handshake, pushes `messages` as text
-    * frames. Ephemeral port; call `port` after `start()`. */
-  private final class TestWsServer(messages: Seq[String]) {
+    * frames, `gapMs` apart. Ephemeral port; call `port` after `start()`. */
+  private final class TestWsServer(messages: Seq[String], gapMs: Long = 0) {
     private val group = new NioEventLoopGroup(1)
     private var ch: io.netty.channel.Channel = _
 
@@ -49,7 +50,11 @@ class WsSpoolerSpec extends SparkSpec {
                 override def userEventTriggered(ctx: ChannelHandlerContext,
                     evt: AnyRef): Unit = evt match {
                   case _: WebSocketServerProtocolHandler.HandshakeComplete =>
-                    messages.foreach(m => ctx.writeAndFlush(new TextWebSocketFrame(m)))
+                    messages.zipWithIndex.foreach { case (m, i) =>
+                      ctx.executor().schedule(new Runnable {
+                        def run(): Unit = { ctx.writeAndFlush(new TextWebSocketFrame(m)); () }
+                      }, gapMs * i, java.util.concurrent.TimeUnit.MILLISECONDS)
+                    }
                   case other => super.userEventTriggered(ctx, other)
                 }
               })
@@ -92,7 +97,7 @@ class WsSpoolerSpec extends SparkSpec {
     assert(names.size == 3 && names.forall(_.startsWith("spool-")), s"got $names")
 
     // The spool is a valid replay root: same pipeline, same rows.
-    val raw = new FileReplaySource(spoolRoot.toString,
+    val raw = new Dsv2ReplaySource(spoolRoot.toString,
       fixedArrivalMs = Some(1727784005000L))
       .stream(spark, EventId.parse("binance.spot.bnbusdt.trade"))
     val q = Pipelines.trades(raw)
@@ -103,6 +108,42 @@ class WsSpoolerSpec extends SparkSpec {
     q.stop()
     val got = spark.table("ws_out").select("id").collect().map(_.getLong(0))
     assert(got.sorted.toSeq == (1L to 7L))
+  }
+
+  test("a spool that grows while the query runs is written once, in batchSize batches") {
+    val messages = (1 to 20).map(tradeLine)
+    val server = new TestWsServer(messages, gapMs = 50) // about 1 s of arrivals
+    val port = server.start()
+    val spoolRoot = tmp("wsspool-grow")
+    val streamDir = spoolRoot.resolve("bnbusdt.spot.trade")
+    Files.createDirectories(streamDir)
+    val out = tmp("wsgrow-csv")
+    // the query starts on the empty spool; files land while it runs
+    val qs = Runner.startWithSinks(spark,
+      StreamConfig(Seq("binance.spot.bnbusdt.trade"), out.toString),
+      new Dsv2ReplaySource(spoolRoot.toString, batchSize = 4, fixedArrivalMs = Some(1727784005000L)),
+      Map.empty, checkpointRoot = tmp("ckpt").toString)
+    val q = qs.head._1
+    val spooler = new WsSpooler(
+      URI.create(s"ws://127.0.0.1:$port/ws"), streamDir, flushEvery = 3)
+    try {
+      spooler.start()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (spooler.messagesReceived < messages.size &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+      assert(spooler.failure.isEmpty, s"ws transport error: ${spooler.failure}")
+    } finally {
+      spooler.stop()
+      server.stop()
+    }
+    q.processAllAvailable()
+    val sizes = q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+    Runner.stopAll(Seq(q))
+
+    val ids = Files.readAllLines(out.resolve("bnbusdt.spot.trades.csv")).asScala
+      .tail.map(_.split(",")(2).toLong)
+    assert(ids.toSeq == (1L to 20L), "every spooled line written exactly once, in order")
+    assert(sizes.sum == 20 && sizes.forall(_ <= 4), s"batch sizes $sizes")
   }
 
   // ---- depth: the reference's HARD half (spot_depth_etl.py:35-54) ----
@@ -128,7 +169,7 @@ class WsSpoolerSpec extends SparkSpec {
     // flushEvery=2 splits the tape mid-sync (ack+stale | bridge+delta),
     // exercising the count-based flush + atomic-rename handoff on the
     // stateful path (cross-BATCH state carry is covered by ResumeSpec;
-    // the file source may take both spool files in one trigger).
+    // both spool files fit in one 1000-line batch here).
     val spooler = new WsSpooler(
       URI.create(s"ws://127.0.0.1:$port/ws"), streamDir, flushEvery = 2)
     try {
@@ -146,7 +187,7 @@ class WsSpoolerSpec extends SparkSpec {
     // snapshot injection, contiguity check, sync state machine, level
     // explode, header-once CSV sink (the reference's storage layout).
     val out = tmp("ws-depth-csv")
-    val source = new FileReplaySource(spoolRoot.toString,
+    val source = new Dsv2ReplaySource(spoolRoot.toString,
       fixedArrivalMs = Some(1727784001000L))
     val qs = Runner.startWithSinks(spark,
       StreamConfig(Seq("binance.spot.bnbusdt.depth"), out.toString),
