@@ -31,16 +31,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
       VectorFunctions.dotProductBuilder))
     ext.injectFunction((
-      FunctionIdentifier("topk_assign"),
-      new ExpressionInfo(
-        classOf[graft.functions.TopKAssign].getName, "topk_assign"),
-      graft.functions.TopKAssignFunction.assignBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("topk_route"),
-      new ExpressionInfo(
-        classOf[graft.functions.TopKRoute].getName, "topk_route"),
-      graft.functions.TopKAssignFunction.routeBuilder))
-    ext.injectFunction((
       FunctionIdentifier("bloom_agg"),
       new ExpressionInfo(
         classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,

@@ -238,7 +238,8 @@ object T {
     * (q26/q30's FenceCap thins the anchor sample — its fk is
     * value-coupled into the oracle and follows the corpus count;
     * Similarity.TwoLevelK's coarse/fine routing is approximate by
-    * contract). Never set in production. */
+    * contract). The assignment kernels' centroid table has no fence to
+    * force: it always ships as a Broadcast. Never set in production. */
   private[graft] val ForceAboveFence: Boolean =
     sys.env.contains("SPARK_GRAFT_FORCE_ABOVE_FENCE")
 

@@ -7,9 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Pre-resolved centroid table for the assignment kernels: a foldable
-  * centroid literal evaluated ONCE (lazily, per executor) into plain
-  * JVM arrays the scoring loop can run at JIT speed. */
+/** Pre-resolved centroid table for the assignment kernels: plain JVM
+  * arrays the scoring loop can run at JIT speed, built once on the
+  * driver and shipped by broadcast. */
 final class CentTable(
     val cids: Array[Long],
     val css: Array[Array[Long]],
@@ -57,17 +57,12 @@ object VectorKernels {
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
-  private def centRow(r: InternalRow, cidAt: Int, csAt: Int, cnAt: Int)
-      : (Long, Array[Long], Double) =
-    (r.getLong(cidAt), r.getArray(csAt).toLongArray(), r.getDouble(cnAt))
-
-  /** Driver-side [[CentTable]] builder from the same (cid, cs, cn)
-    * rows the literal path folds — for the broadcast ship path. */
+  /** Driver-side [[CentTable]] builder from (cid, cs, cn) rows. */
   def centTableLocal(rows: Array[(Long, Seq[Long], Double)]): CentTable =
     new CentTable(rows.map(_._1), rows.map(_._2.toArray), rows.map(_._3))
 
   /** Driver-side [[RouteTable]] builder from (gid, gs, gn) coarse and
-    * (gid, cid, cs, cn) fine rows — for the broadcast ship path. */
+    * (gid, cid, cs, cn) fine rows. */
   def routeTableLocal(coarse: Array[(Long, Seq[Long], Double)],
       fine: Array[(Long, Long, Seq[Long], Double)]): RouteTable = {
     val m = new java.util.HashMap[java.lang.Long, CentTable]()
@@ -76,27 +71,6 @@ object VectorKernels {
         new CentTable(rows.map(_._2), rows.map(_._3.toArray), rows.map(_._4)))
     }
     new RouteTable(centTableLocal(coarse), m)
-  }
-
-  def centTable(cents: ArrayData): CentTable = {
-    val rows = Array.tabulate(cents.numElements()) { i =>
-      centRow(cents.getStruct(i, 3), 0, 1, 2)
-    }
-    new CentTable(rows.map(_._1), rows.map(_._2), rows.map(_._3))
-  }
-
-  /** fine rows are (gid, cid, cs, cn); coarse rows are (gid, gs, gn). */
-  def routeTable(coarse: ArrayData, fine: ArrayData): RouteTable = {
-    val byGid = Array.tabulate(fine.numElements()) { i =>
-      val r = fine.getStruct(i, 4)
-      (r.getLong(0), centRow(r, 1, 2, 3))
-    }.groupBy(_._1)
-    val m = new java.util.HashMap[java.lang.Long, CentTable]()
-    byGid.foreach { case (gid, rows0) =>
-      val rows = rows0.map(_._2)
-      m.put(gid, new CentTable(rows.map(_._1), rows.map(_._2), rows.map(_._3)))
-    }
-    new RouteTable(centTable(coarse), m)
   }
 
   /** Score `qa` against every centroid of `tbl` — exact BIGINT dot,
@@ -182,9 +156,9 @@ object VectorKernels {
     while (g < nProbes) {
       val fine = tbl.fineOf.get(gIds(g))
       // internal callers can't hit this (coarseGroups emits only live
-      // gids), but topk_route is SQL-registered: a user-supplied
-      // coarse/fine pair with an unmatched gid must fail with a named
-      // error, not an NPE inside codegen'd code
+      // gids), but routeTableLocal takes any coarse/fine pair: an
+      // unmatched gid must fail with a named error, not an NPE inside
+      // codegen'd code
       if (fine == null)
         throw new IllegalStateException(
           s"topk_route: coarse gid ${gIds(g)} has no fine-table entry")
@@ -196,9 +170,20 @@ object VectorKernels {
 }
 
 /** Common scaffolding for the two assignment expressions: both take
-  * (q: array<bigint>, qn: double, keep-literal, table-literal(s)) and
-  * return array<struct<ccos double, cid bigint>> sorted by
-  * (ccos desc, cid asc). Null in q/qn → null out. */
+  * (q: array<bigint>, qn: double) children plus a centroid table that
+  * rides a Spark `Broadcast` variable, and return
+  * array<struct<ccos double, cid bigint>> sorted by (ccos desc,
+  * cid asc). Null in q/qn → null out.
+  *
+  * The broadcast ships the table torrent-wise once per EXECUTOR and
+  * deserializes it once per executor (cached in generated-class
+  * mutable state, one `.value()` per task); the expression tree
+  * carries only the handle. A foldable literal would instead ride the
+  * stage's task binary and be deserialized per TASK — measured slower
+  * at every table size tried, from 2048 rows (~1 MB) to the two-level
+  * fine table's 4√n ceiling (~126k rows ≈ 65 MB at 10⁹ vectors):
+  * BASELINE.md round 13. Not SQL-registered: a broadcast handle has
+  * no SQL literal form. */
 abstract class AssignExpr extends Expression {
 
   protected def q: Expression = children(0)
@@ -212,19 +197,7 @@ abstract class AssignExpr extends Expression {
 
   override def nullable: Boolean = q.nullable || qn.nullable
 
-  protected def centsTypeOk(dt: DataType, fields: Int): Boolean = dt match {
-    case ArrayType(StructType(fs), _) if fs.length == fields =>
-      val vals = if (fields == 4) fs.drop(1) else fs
-      (fields == 3 || fs.head.dataType == LongType) &&
-        vals(0).dataType == LongType && vals(2).dataType == DoubleType &&
-        (vals(1).dataType match {
-          case ArrayType(LongType, _) => true
-          case _ => false
-        })
-    case _ => false
-  }
-
-  protected def baseCheck(): TypeCheckResult =
+  override def checkInputDataTypes(): TypeCheckResult =
     if (!q.dataType.isInstanceOf[ArrayType] ||
         q.dataType.asInstanceOf[ArrayType].elementType != LongType)
       TypeCheckResult.TypeCheckFailure(
@@ -232,11 +205,6 @@ abstract class AssignExpr extends Expression {
     else if (qn.dataType != DoubleType)
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName: qn must be double, got ${qn.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  protected def intLit(e: Expression, what: String): TypeCheckResult =
-    if (e.dataType != IntegerType || !e.foldable)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName: $what must be a literal int")
     else TypeCheckResult.TypeCheckSuccess
 
   /** The kernel invocation as generated Java, given q/qn value refs. */
@@ -269,129 +237,13 @@ abstract class AssignExpr extends Expression {
   }
 }
 
-/** `topk_assign(q, qn, keep, cents)` — flat per-row top-`keep`
-  * centroid assignment against a FOLDABLE centroid table
-  * (array<struct<cid, cs, cn>>, ≤ TwoLevelK rows by the caller's
-  * fence, so the literal stays ≤ ~1 MB riding the once-per-stage
-  * broadcast task binary). See [[VectorKernels.topkAssign]]. */
-case class TopKAssign(children: Seq[Expression]) extends AssignExpr {
-
-  private def keepE = children(2)
-  private def cents = children(3)
-
-  override def prettyName: String = "topk_assign"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val b = baseCheck()
-    if (b != TypeCheckResult.TypeCheckSuccess) b
-    else {
-      val k = intLit(keepE, "keep")
-      if (k != TypeCheckResult.TypeCheckSuccess) k
-      else if (!centsTypeOk(cents.dataType, 3) || !cents.foldable)
-        TypeCheckResult.TypeCheckFailure(
-          s"$prettyName: cents must be a foldable array<struct<bigint, array<bigint>, " +
-            s"double>>, got ${cents.dataType.sql}")
-      else TypeCheckResult.TypeCheckSuccess
-    }
-  }
-
-  @transient private lazy val keepV: Int = keepE.eval().asInstanceOf[Int]
-  @transient private lazy val table: CentTable =
-    VectorKernels.centTable(cents.eval().asInstanceOf[ArrayData])
-
-  override protected def kernelEval(qv: ArrayData, qnv: Double): ArrayData =
-    VectorKernels.topkAssign(qv, qnv, table, keepV)
-
-  override protected def kernelCall(ctx: CodegenContext,
-      qV: String, qnV: String): String = {
-    val tblRef = ctx.addReferenceObj("centTable", table,
-      classOf[CentTable].getName)
-    s"graft.functions.VectorKernels.topkAssign($qV, $qnV, $tblRef, $keepV)"
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
-}
-
-/** `topk_route(q, qn, keep, probes, coarse, fine)` — two-level IVF
-  * assignment in one projection: route to the `probes` best coarse
-  * groups, argmax over only those groups' fine centroids. Both tables
-  * are foldable literals (coarse: array<struct<gid, gs, gn>>, fine:
-  * array<struct<gid, cid, cs, cn>>); the fine literal ships once per
-  * stage in the broadcast task binary — the same volume the previous
-  * broadcast-hash-join shipped, without the join, the per-vec
-  * candidate explosion, or the window sort that followed it.
-  * See [[VectorKernels.topkRoute]]. */
-case class TopKRoute(children: Seq[Expression]) extends AssignExpr {
-
-  private def keepE = children(2)
-  private def probesE = children(3)
-  private def coarse = children(4)
-  private def fine = children(5)
-
-  override def prettyName: String = "topk_route"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val checks = Seq(baseCheck(), intLit(keepE, "keep"), intLit(probesE, "probes"))
-    checks.find(_ != TypeCheckResult.TypeCheckSuccess).getOrElse {
-      if (!centsTypeOk(coarse.dataType, 3) || !coarse.foldable)
-        TypeCheckResult.TypeCheckFailure(
-          s"$prettyName: coarse must be a foldable array<struct<bigint, array<bigint>, " +
-            s"double>>, got ${coarse.dataType.sql}")
-      else if (!centsTypeOk(fine.dataType, 4) || !fine.foldable)
-        TypeCheckResult.TypeCheckFailure(
-          s"$prettyName: fine must be a foldable array<struct<bigint, bigint, " +
-            s"array<bigint>, double>>, got ${fine.dataType.sql}")
-      else TypeCheckResult.TypeCheckSuccess
-    }
-  }
-
-  @transient private lazy val keepV: Int = keepE.eval().asInstanceOf[Int]
-  @transient private lazy val probesV: Int = probesE.eval().asInstanceOf[Int]
-  @transient private lazy val table: RouteTable =
-    VectorKernels.routeTable(
-      coarse.eval().asInstanceOf[ArrayData],
-      fine.eval().asInstanceOf[ArrayData])
-
-  override protected def kernelEval(qv: ArrayData, qnv: Double): ArrayData =
-    VectorKernels.topkRoute(qv, qnv, table, probesV, keepV)
-
-  override protected def kernelCall(ctx: CodegenContext,
-      qV: String, qnV: String): String = {
-    val tblRef = ctx.addReferenceObj("routeTable", table,
-      classOf[RouteTable].getName)
-    s"graft.functions.VectorKernels.topkRoute($qV, $qnV, $tblRef, $probesV, $keepV)"
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
-}
-
-/** Broadcast-shipped twins of [[TopKAssign]]/[[TopKRoute]]: the same
-  * kernels, but the centroid table rides a Spark `Broadcast` variable
-  * instead of a foldable literal. The literal form serializes the
-  * table into the stage's task binary — shipped once per stage but
-  * deserialized PER TASK: fine at the ≤ 2048-row flat scale (~1 MB),
-  * yet at the two-level fine table's 4√n ceiling (~126k rows ≈ 65 MB
-  * at 10⁹ vectors) per-task deserialization would dominate short
-  * tasks across thousands of tasks. The broadcast form ships the same
-  * bytes torrent-wise once per EXECUTOR, deserializes once per
-  * executor (cached in generated-class mutable state, one `.value()`
-  * per task), and the expression tree carries only the handle.
-  * Value-identical by construction (same table, same kernel) — the
-  * caller fences on `graft.T.belowFence(k, RouteShipCap)`, so the
-  * engaged-branch sweep proves this ship path oracle-exact. Not
-  * SQL-registered: a broadcast handle has no SQL literal form. */
-abstract class AssignBcExpr extends AssignExpr {
-  override def checkInputDataTypes(): TypeCheckResult = baseCheck()
-}
-
+/** `topk_assign_bc(q, qn)` — flat per-row top-`keepV` centroid
+  * assignment against a broadcast [[CentTable]].
+  * See [[VectorKernels.topkAssign]]. */
 case class TopKAssignBc(
     children: Seq[Expression],
     bc: org.apache.spark.broadcast.Broadcast[CentTable],
-    keepV: Int) extends AssignBcExpr {
+    keepV: Int) extends AssignExpr {
 
   override def prettyName: String = "topk_assign_bc"
 
@@ -414,10 +266,14 @@ case class TopKAssignBc(
     copy(children = newChildren)
 }
 
+/** `topk_route_bc(q, qn)` — two-level IVF assignment in one
+  * projection against a broadcast [[RouteTable]]: route to the
+  * `probesV` best coarse groups, top-`keepV` over only those groups'
+  * fine centroids. See [[VectorKernels.topkRoute]]. */
 case class TopKRouteBc(
     children: Seq[Expression],
     bc: org.apache.spark.broadcast.Broadcast[RouteTable],
-    keepV: Int, probesV: Int) extends AssignBcExpr {
+    keepV: Int, probesV: Int) extends AssignExpr {
 
   override def prettyName: String = "topk_route_bc"
 
@@ -438,21 +294,4 @@ case class TopKRouteBc(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(children = newChildren)
-}
-
-object TopKAssignFunction {
-
-  val assignBuilder: Seq[Expression] => Expression = exprs => {
-    if (exprs.length != 4)
-      throw new IllegalArgumentException(
-        s"topk_assign expects exactly 4 arguments, got ${exprs.length}")
-    TopKAssign(exprs)
-  }
-
-  val routeBuilder: Seq[Expression] => Expression = exprs => {
-    if (exprs.length != 6)
-      throw new IllegalArgumentException(
-        s"topk_route expects exactly 6 arguments, got ${exprs.length}")
-    TopKRoute(exprs)
-  }
 }

@@ -150,10 +150,6 @@ object VectorFunctions {
   def register(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "dot_product", dotProductBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_assign", TopKAssignFunction.assignBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_route", TopKAssignFunction.routeBuilder, "built-in")
   }
 
   /** Convenience: dot_product over two columns known by name. */

@@ -276,7 +276,7 @@ object Similarity {
     * cosine's divide is IEEE — a deterministic operation on two
     * exactly-agreed values. */
   private def qvecs(s: SparkSession, d: String): DataFrame =
-    // spread the scan (round 16): the topk_assign/topk_route kernel
+    // spread the scan (round 16): the topk_assign_bc/topk_route_bc kernel
     // projections the IVF family (q31/q52/q97/q112/q113 + the Lloyd
     // chain) runs over this frame are row-local — on the single
     // test-scale split they serialized on one core. Identity at real
@@ -317,7 +317,7 @@ object Similarity {
     * Since round 12 this join+window form is the TEST REFERENCE only
     * (DedupScaleSpec scores the topk kernels' agreement against it as
     * an independent implementation of the same argmax); every query
-    * path assigns via the row-local `topk_assign`/`topk_route`
+    * path assigns via the row-local `topk_assign_bc`/`topk_route_bc`
     * kernels ([[assignRows]], [[labelAssign]]) — the n·k-row window
     * sort here is exactly what they exist to avoid. */
   private[queries] def assignTo(v: DataFrame, c: DataFrame, keep: Int): DataFrame = {
@@ -394,10 +394,15 @@ object Similarity {
       val c0 = collectC(qv
         .orderBy(col("vec_id")).limit(ivfK(s, d).toInt)
         .select(col("vec_id").as("cid"), col("q").as("cs"), col("qn").as("cn")))
+      // each generation is assigned against once: its broadcast is
+      // released as soon as the next generation is collected
       val c1 = collectC(recompute(
         assignRows(s, qv, c0, 1).select(col("cid"), col("q"))))
-      collectC(recompute(
+      releaseBc(c0)
+      val c2 = collectC(recompute(
         assignRows(s, qv, c1, 1).select(col("cid"), col("q"))))
+      releaseBc(c1)
+      c2
     })
     (qv, rows)
   }
@@ -543,38 +548,16 @@ object Similarity {
     (coarse, fine)
   }
 
-  /** Centroid-table ship fence: the max table row count shipped to
-    * executors as a FOLDABLE LITERAL inside the expression tree. The
-    * literal rides the stage's task binary — broadcast once per stage,
-    * but deserialized (and [[graft.functions.CentTable]]-rebuilt) per
-    * TASK: negligible at the ≤ 2048-row flat scale (~1 MB), yet the
-    * two-level fine table grows as 4√n (~126k rows ≈ 65 MB at 10⁹
-    * vectors), where per-task deserialization across thousands of
-    * tasks would dominate. Past the cap the SAME table ships as a
-    * torrent Broadcast — deserialized once per executor, the
-    * expression carrying only the handle ([[graft.functions
-    * .TopKAssignBc]]/[[graft.functions.TopKRouteBc]]). Value-identical
-    * by construction (same table, same kernel), so oracles never
-    * change and [[graft.T.belowFence]]'s force-sweep proves the
-    * broadcast ship path hash-exact over the full inventory.
-    *
-    * Cap measured by RouteCeilingBench (BASELINE.md round 13, 1M
-    * vectors × 256 tasks): the broadcast ship wins WALL at every
-    * k ≥ 2048 (0.81 vs 1.21 s at the 1.1 MB table, 3.5 vs 26.5 s at
-    * the 65 MB 4√n ceiling, where the literal pays 43.5 s total /
-    * 5.3 s max-task deserialization vs a flat ~0.3 s) — so the cap
-    * sits AT [[TwoLevelK]]: the two-level regime always ships
-    * broadcast, the common sub-2048 flat regime keeps the
-    * zero-lifecycle literal (its per-task cost at k ≤ 2048 is ≤ ~4 ms
-    * — under the noise floor of any real stage). */
-  private[graft] val RouteShipCap: Long = 2048L
-
-  /** Memoized per-table broadcasts for the above-fence ship path,
-    * keyed on the centroid array's identity — [[lloydRowsOf]] memoizes
-    * that array per corpus fingerprint, so a corpus's serving table
-    * broadcasts once per JVM. Training intermediates (c0/c1) add one
-    * short-lived broadcast each per index build, the same lifecycle a
-    * deployment's index builder has. */
+  /** Memoized per-table broadcasts for the assignment kernels, keyed
+    * on the centroid array's identity. The memo keeps one entry per
+    * table that lives for the JVM: a corpus's serving table
+    * ([[lloydRowsOf]]'s `centroidCache` entry, which the SemDedup
+    * index also serves from) and its label prototypes
+    * (`prototypeCache`), i.e. one entry each per corpus fingerprint,
+    * as those two caches keep their arrays. The training generations
+    * c0/c1 are assigned against once each, so [[lloydRowsOf]] removes
+    * and destroys their entries ([[releaseBc]]) after their collect.
+    * Creating a broadcast starts no job. */
   private val shipBcCache = java.util.Collections.synchronizedMap(
     new java.util.IdentityHashMap[AnyRef,
       org.apache.spark.broadcast.Broadcast[_]]())
@@ -585,66 +568,62 @@ object Similarity {
       _ => s.sparkContext.broadcast(build))
       .asInstanceOf[org.apache.spark.broadcast.Broadcast[A]]
 
+  private def releaseBc(key: AnyRef): Unit =
+    Option(shipBcCache.remove(key)).foreach(_.destroy())
+
   private def exprOf(c: Column) =
     org.apache.spark.sql.graftshim.ExprColumn.expression(c)
 
   private def colOf(e: org.apache.spark.sql.catalyst.expressions.Expression) =
     org.apache.spark.sql.graftshim.ExprColumn.column(e)
 
-  /** Assignment of `v` against a driver-resident centroid table:
-    * single-level ([[assignTo]] — the oracle-replayed shape) at
-    * k ≤ [[TwoLevelK]], coarse/fine above it. The two-level path
-    * routes each vector to its [[CoarseProbes]] best coarse groups
-    * (a ⌈√k⌉-row broadcast nested loop) and runs the fine argmax only
-    * over those groups' centroids via a broadcast HASH join on gid —
-    * n·(√k + probes·k/√k) ≈ 3n√k scored dots instead of n·k, and the
-    * per-row candidate stream is bounded by construction. Approximate
-    * by design above the fence (a vector whose true centroid lives in
-    * an unprobed coarse group mis-assigns — the standard IVF
-    * trade-off); the seeded-scalar test measures the agreement rate
-    * against the exhaustive argmax on a deterministic corpus. */
+  /** Flat top-`keep` assignment column against `rows`: the
+    * codegen'd `topk_assign_bc` kernel over the broadcast table,
+    * array<struct<ccos, cid>> per row. One projection, value-identical
+    * to [[assignTo]] (same rounded cosine, same ccos-desc/cid-asc
+    * order — the oracle twins are untouched) and row-local: zero
+    * shuffle at ANY n. The join+window shape it replaced forced an
+    * n·k-row exchange+SORT with every row dragging the ~0.5 KB
+    * quantized vector: measured spilling tens of GB per pass on the
+    * 1.1M-vector / k=2149 rehearsal corpus. */
+  private def flatAssign(s: SparkSession,
+      rows: Array[(Long, Seq[Long], Double)], keep: Int): Column = {
+    val bc = shipBc(s, rows, graft.functions.VectorKernels.centTableLocal(rows))
+    colOf(graft.functions.TopKAssignBc(
+      Seq(exprOf(col("q")), exprOf(col("qn"))), bc, keep))
+  }
+
+  /** Two-level assignment column against `rows`: coarse routing to
+    * each vector's [[CoarseProbes]] best coarse groups and the fine
+    * argmax over only those groups' centroids, fused in the
+    * `topk_route_bc` kernel — kc + probes·k/kc dots per row instead of
+    * k, still one row-local projection. The driver-side coarse
+    * grouping runs once per table, when its broadcast is built. */
+  private[queries] def routeAssign(s: SparkSession,
+      rows: Array[(Long, Seq[Long], Double)], keep: Int): Column = {
+    val bc = shipBc(s, rows, {
+      val (coarse, fine) = coarseGroups(rows)
+      graft.functions.VectorKernels.routeTableLocal(coarse, fine)
+    })
+    colOf(graft.functions.TopKRouteBc(
+      Seq(exprOf(col("q")), exprOf(col("qn"))), bc, keep, CoarseProbes))
+  }
+
+  /** Assignment of `v` against a driver-resident centroid table: flat
+    * at k ≤ [[TwoLevelK]] ([[flatAssign]] — the oracle-replayed
+    * shape), two-level above it ([[routeAssign]]): n·(√k +
+    * probes·k/√k) ≈ 3n√k scored dots instead of n·k. Approximate by
+    * design above the fence (a vector whose true centroid lives in an
+    * unprobed coarse group mis-assigns — the standard IVF trade-off);
+    * the seeded-scalar test measures the agreement rate against the
+    * exhaustive argmax on a deterministic corpus. The table ships as a
+    * Broadcast in both regimes ([[shipBc]]). */
   private[queries] def assignRows(s: SparkSession, v: DataFrame,
       rows: Array[(Long, Seq[Long], Double)], keep: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
-    import graft.functions.{TopKAssignBc, TopKRouteBc, VectorKernels}
-    val assigned =
-      if (rows.length <= TwoLevelK) {
-        // flat: one projection through the codegen'd topk_assign
-        // kernel. The previous shape — broadcast join against the
-        // k-row table, then row_number() over (vec_id) — forced an
-        // n·k-row exchange+SORT with every row dragging the ~0.5 KB
-        // quantized vector: measured spilling tens of GB per pass on
-        // the 1.1M-vector / k=2149 rehearsal corpus. The kernel is
-        // value-identical (same rounded cosine, same ccos-desc/cid-asc
-        // order — the oracle twins are untouched) and row-local: zero
-        // shuffle at ANY n. Table ship mechanism fenced on
-        // [[RouteShipCap]]: foldable literal below, Broadcast above.
-        if (graft.T.belowFence(rows.length, RouteShipCap))
-          v.select(col("*"), explode(call_function("topk_assign",
-            col("q"), col("qn"), lit(keep), typedLit(rows.toSeq))).as("_a"))
-        else {
-          val bc = shipBc(s, rows, VectorKernels.centTableLocal(rows))
-          v.select(col("*"), explode(colOf(TopKAssignBc(
-            Seq(exprOf(col("q")), exprOf(col("qn"))), bc, keep))).as("_a"))
-        }
-      } else {
-        // two-level: coarse routing + fine argmax fused into the
-        // topk_route kernel — kc + probes·k/kc dots per row instead
-        // of k, still one row-local projection. Same ship fence: the
-        // fine table is the one that grows as 4√n.
-        val (coarse, fine) = coarseGroups(rows)
-        if (graft.T.belowFence(fine.length, RouteShipCap))
-          v.select(col("*"), explode(call_function("topk_route",
-            col("q"), col("qn"), lit(keep), lit(CoarseProbes),
-            typedLit(coarse.toSeq), typedLit(fine.toSeq))).as("_a"))
-        else {
-          val bc = shipBc(s, rows, VectorKernels.routeTableLocal(coarse, fine))
-          v.select(col("*"), explode(colOf(TopKRouteBc(
-            Seq(exprOf(col("q")), exprOf(col("qn"))), bc, keep,
-            CoarseProbes))).as("_a"))
-        }
-      }
-    assigned
+    val kernel =
+      if (rows.length <= TwoLevelK) flatAssign(s, rows, keep)
+      else routeAssign(s, rows, keep)
+    v.select(col("*"), explode(kernel).as("_a"))
       .withColumn("cid", col("_a").getField("cid"))
       .withColumn("ccos", col("_a").getField("ccos"))
       .drop("_a")
@@ -1016,7 +995,7 @@ object Similarity {
     * web-scale through semantic deduplication") re-expressed on the
     * IVF index the engine already learns. Each admissible vector is
     * assigned to its single nearest Lloyd's centroid (the memoized
-    * index + row-local `topk_assign`/`topk_route` kernels, exactly
+    * index + row-local `topk_assign_bc`/`topk_route_bc` kernels, exactly
     * q31's assignment — zero joins/windows/exchanges in assignment);
     * a vector is DROPPED when an earlier (lower vec_id) member of its
     * cluster scores rounded cosine ≥ 0.42 against it. Output: one row
@@ -1077,10 +1056,10 @@ object Similarity {
     * by construction (asserted in StreamingSemDedupSpec).
     *
     * Scale shape: assignment is the row-local topk kernel against the
-    * driver-resident centroid table (zero shuffle, same fences as
-    * q31); the only index-scale operation is the cluster-equality
-    * join against the persisted, cluster-partitioned member frame —
-    * per batch the incoming side is shard-sized. */
+    * driver-resident centroid table (zero shuffle, same TwoLevelK
+    * fence as q31); the only index-scale operation is the
+    * cluster-equality join against the persisted, cluster-partitioned
+    * member frame — per batch the incoming side is shard-sized. */
   private[graft] def semDedupGate(s: SparkSession, batch: DataFrame,
       centroids: Array[(Long, Seq[Long], Double)],
       members: DataFrame): DataFrame = {
@@ -1786,10 +1765,9 @@ object Similarity {
     // row-local kernel assignment (round 12) — the label-prototype
     // argmax was the last join+window assignment left: a ≤10-row
     // BNLJ is bounded, but the row_number() above it still sorted
-    // n·10 wide rows per corpus, the same disease assignRows shed
-    lq.select(col("vec_id"), col("label"),
-        explode(call_function("topk_assign",
-          col("q"), col("qn"), lit(1), typedLit(rows.toSeq))).as("_a"))
+    // n·10 wide rows per corpus, the same disease assignRows shed.
+    // Always flat: ≤10 prototypes, whatever TwoLevelK is seeded to.
+    lq.select(col("vec_id"), col("label"), explode(flatAssign(s, rows, 1)).as("_a"))
       .select(col("vec_id"), col("label"),
         col("_a").getField("cid").as("pred"),
         col("_a").getField("ccos").as("score"))

@@ -135,8 +135,12 @@ object Pipelines {
       .filter(col(ViolationCol).isNull)
       .drop("value", ViolationCol)
 
+  /** One (side, price, quantity) struct per level. A non-null level
+    * shorter than [price, qty] is skipped, as the book fold skips it
+    * (`StreamingBook.applyLevels`); a null level stays, as empty
+    * fields. */
   private def sideStructs(arr: Column, label: String): Column =
-    transform(arr, x => struct(
+    transform(filter(arr, x => x.isNull || size(x) >= 2), x => struct(
       lit(label).as("side"),
       x.getItem(0).as("price"),
       x.getItem(1).as("quantity")))
@@ -153,7 +157,8 @@ object Pipelines {
     * `quantity == "0..."` rows are KEPT (level removal is data).
     * Runs after the book sync, so only admitted records are parsed; a
     * side that parses to null drops its whole message (the concat is
-    * null). Output columns = DepthRow. */
+    * null), and a level without its quantity is skipped. Output
+    * columns = DepthRow. */
   def depthRows(records: DataFrame): DataFrame =
     records.select(
       col("timestamp"), col("local_timestamp"),

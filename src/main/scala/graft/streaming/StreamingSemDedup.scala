@@ -27,8 +27,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   * Batch q112 instead dedups within the closed corpus; the two agree
   * on any vector whose nearest above-threshold neighbor is indexed.
   *
-  * Scale design: assignment rides the same row-local topk_assign /
-  * topk_route kernels (and RouteShipCap / TwoLevelK fences) as q31 —
+  * Scale design: assignment rides the same row-local topk_assign_bc /
+  * topk_route_bc kernels (and TwoLevelK fence) as q31 —
   * zero shuffle per batch for the routing; the member frame is
   * persisted and cluster-partitioned once at index build, so the
   * per-batch join shuffles only the shard-sized incoming side. State

@@ -2,7 +2,7 @@ package graft.streaming.source
 
 import java.net.URI
 import java.net.http.{HttpClient, WebSocket}
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 import java.util.concurrent.CompletionStage
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
@@ -24,9 +24,13 @@ import scala.jdk.CollectionConverters._
   * the websocket protocol) buffer in memory and flush every
   * `flushEvery` messages — the reference's count-based batching,
   * `config.json:10` batch_size — as sequentially-numbered jsonl files,
-  * written to a hidden temp name and ATOMICALLY renamed so the replay
-  * source never observes a partial file. `stop()` flushes the
-  * remainder.
+  * written to a hidden temp name and ATOMICALLY linked to the final
+  * name so the replay source never observes a partial file. A spooler
+  * started on a non-empty directory numbers its files after the
+  * highest existing `spool-*.jsonl`, and a flush never replaces a file
+  * (it fails instead): a replay that already admitted a file's lines
+  * must never read different lines at the same offsets. `stop()`
+  * flushes the remainder.
   *
   * The binance endpoint itself (`wss://stream.binance.com:9443/ws/...`,
   * subscribe paths `spot_trades_etl.py:20` / `spot_depth_etl.py:25`)
@@ -70,21 +74,23 @@ final class WsSpooler(
     }
   }
 
-  private def onMessage(m: String): Unit = synchronized {
+  private[streaming] def onMessage(m: String): Unit = synchronized {
     buf += m
     nSpooled.incrementAndGet()
     if (buf.size >= flushEvery) flush()
   }
 
-  /** Writes buffered messages as the next spool file, by atomic rename
-    * from a `.`-prefixed temp name that the replay source also skips. */
+  /** Writes buffered messages as the next spool file: a `.`-prefixed
+    * temp file (which the replay source skips), then a hard link to the
+    * final name, which appears whole and fails with
+    * `FileAlreadyExistsException` instead of replacing a file. */
   def flush(): Unit = synchronized {
     if (buf.nonEmpty) {
       val n = fileSeq.getAndIncrement()
       val tmp = spoolDir.resolve(f".spool-$n%08d.tmp")
       val dst = spoolDir.resolve(f"spool-$n%08d.jsonl")
       Files.write(tmp, buf.asJava)
-      Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
+      try Files.createLink(dst, tmp) finally Files.delete(tmp)
       buf.clear()
     }
   }
@@ -97,6 +103,7 @@ final class WsSpooler(
 
   def start(): WsSpooler = {
     Files.createDirectories(spoolDir)
+    fileSeq.set(WsSpooler.nextFileSeq(spoolDir))
     ws = HttpClient.newHttpClient().newWebSocketBuilder()
       .buildAsync(uri, Listener).join()
     this
@@ -119,6 +126,17 @@ final class WsSpooler(
 }
 
 object WsSpooler {
+  private val SpoolName = """spool-(\d+)\.jsonl""".r
+
+  /** The number after the highest `spool-*.jsonl` in `dir`, 0 if none. */
+  private def nextFileSeq(dir: Path): Long = {
+    val names = Files.list(dir)
+    try names.iterator().asScala.map(_.getFileName.toString).collect {
+      case SpoolName(n) => n.toLong + 1
+    }.foldLeft(0L)(math.max)
+    finally names.close()
+  }
+
   /** The reference's live subscribe URI for a spot trade stream
     * (`spot_trades_etl.py:20`); depth: `spot_depth_etl.py:25`.
     * Unreachable in this environment — documented for completeness. */

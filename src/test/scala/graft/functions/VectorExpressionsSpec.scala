@@ -1,7 +1,9 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ExprColumn
 
 /** DotProduct matches the HOF fold it replaces — including the null
   * and length-mismatch poisoning semantics. */
@@ -109,10 +111,13 @@ class VectorExpressionsSpec extends SparkSpec {
     val table = cents.map { case (c, cs, _) =>
       (c, cs, math.sqrt(cs.map(x => x.toDouble * x).sum))
     }
+    val bcT = spark.sparkContext.broadcast(
+      VectorKernels.centTableLocal(table.toArray))
     for (keep <- Seq(1, 2, 5)) {
       val kernel = v.select(col("vec_id"),
-          explode(call_function("topk_assign", col("q"), col("qn"),
-            lit(keep), typedLit(table))).as("_a"))
+          explode(ExprColumn.column(TopKAssignBc(
+            Seq(ExprColumn.expression(col("q")), ExprColumn.expression(col("qn"))),
+            bcT, keep))).as("_a"))
         .select(col("vec_id"), col("_a.cid"), col("_a.ccos"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       val c = table.toDF("cid", "cs", "cn")
@@ -128,79 +133,25 @@ class VectorExpressionsSpec extends SparkSpec {
       assert(kernel.sortBy(x => (x._1, x._2)) == window.sortBy(x => (x._1, x._2)),
         s"kernel vs window divergence at keep=$keep")
     }
-  }
-
-  test("broadcast ship path is byte-identical to the literal ship path") {
-    import spark.implicits._
-    import org.apache.spark.sql.graftshim.ExprColumn
-    VectorFunctions.register(spark)
-    val rnd = new scala.util.Random(11)
-    val table = (0L until 40L).map { c =>
-      val cs = Seq.fill(8)(rnd.nextInt(2001).toLong - 1000)
-      (c, cs, math.sqrt(cs.map(x => x.toDouble * x).sum))
-    }
-    val v = (0L until 300L).map { i =>
-      (i, Seq.fill(8)(rnd.nextInt(2001).toLong - 1000))
-    }.toDF("vec_id", "q")
-      .withColumn("qn", sqrt(expr("dot_product(q, q)").cast("double")))
-      .filter(col("qn") > 0)
-    def collectA(c: org.apache.spark.sql.Column): Seq[(Long, Long, Long)] =
-      v.select(col("vec_id"), explode(c).as("_a"))
-        .select(col("vec_id"), col("_a.cid"), col("_a.ccos"))
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          java.lang.Double.doubleToLongBits(r.getDouble(2))))
-        .sortBy(x => (x._1, x._2)).toSeq
-    // flat: topk_assign literal vs TopKAssignBc over the same table
-    val litFlat = collectA(call_function("topk_assign",
-      col("q"), col("qn"), lit(3), typedLit(table)))
-    val bcT = spark.sparkContext.broadcast(
-      VectorKernels.centTableLocal(table.toArray))
-    val bcFlat = collectA(ExprColumn.column(TopKAssignBc(
-      Seq(ExprColumn.expression(col("q")), ExprColumn.expression(col("qn"))),
-      bcT, 3)))
-    assert(litFlat == bcFlat, "topk_assign_bc diverged from the literal ship")
-    // route: synthetic gid grouping (gid = cid % 6, coarse = floor-mean
-    // of members — the coarseGroups magnitude contract)
-    val fine = table.map { case (c, cs, cn) => (c % 6, c, cs, cn) }
-    val coarse = fine.groupBy(_._1).toSeq.map { case (g, ms) =>
-      val gs = (0 until 8).map(j =>
-        math.floor(ms.map(_._3(j)).sum.toDouble / ms.size).toLong)
-      (g, gs, math.sqrt(gs.map(x => x.toDouble * x).sum))
-    }.sortBy(_._1)
-    val litRoute = collectA(call_function("topk_route",
-      col("q"), col("qn"), lit(2), lit(2), typedLit(coarse), typedLit(fine)))
-    val bcR = spark.sparkContext.broadcast(
-      VectorKernels.routeTableLocal(coarse.toArray, fine.toArray))
-    val bcRoute = collectA(ExprColumn.column(TopKRouteBc(
-      Seq(ExprColumn.expression(col("q")), ExprColumn.expression(col("qn"))),
-      bcR, 2, 2)))
-    assert(litRoute == bcRoute, "topk_route_bc diverged from the literal ship")
-    bcT.destroy(); bcR.destroy()
+    bcT.destroy()
   }
 
   test("topk_route names the missing gid instead of NPEing") {
-    import spark.implicits._
-    VectorFunctions.register(spark)
-    // topk_route is SQL-registered, so a user-supplied coarse/fine
-    // literal pair can carry a coarse gid with no fine members; the
-    // kernel must fail with a named error, not a bare NPE inside
-    // codegen'd code
-    val coarse = Seq(
+    // routeTableLocal takes any coarse/fine pair, so a coarse gid can
+    // come with no fine members; the kernel must fail with a named
+    // error, not a bare NPE inside codegen'd code
+    val coarse = Array(
       (0L, Seq(1L, 0L), 1.0),
       (1L, Seq(0L, 1L), 1.0))
-    val fine = Seq( // gid 1 has NO fine entry
+    val fine = Array( // gid 1 has NO fine entry
       (0L, 10L, Seq(1L, 0L), 1.0),
       (0L, 11L, Seq(1L, 1L), math.sqrt(2.0)))
-    val v = Seq((0L, Seq(1L, 1L))).toDF("vec_id", "q")
-      .withColumn("qn", sqrt(expr("dot_product(q, q)").cast("double")))
-    val ex = intercept[Exception] {
-      v.select(call_function("topk_route", col("q"), col("qn"),
-        lit(1), lit(2), typedLit(coarse), typedLit(fine))).collect()
+    val tbl = VectorKernels.routeTableLocal(coarse, fine)
+    val ex = intercept[IllegalStateException] {
+      VectorKernels.topkRoute(ArrayData.toArrayData(Array(1L, 1L)),
+        math.sqrt(2.0), tbl, 2, 1)
     }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(ex).exists(m =>
-      m.contains("topk_route") && m.contains("gid 1")),
-      s"expected a named missing-gid error, got: ${messages(ex)}")
+    assert(ex.getMessage.contains("topk_route") && ex.getMessage.contains("gid 1"),
+      s"expected a named missing-gid error, got: ${ex.getMessage}")
   }
 }

@@ -270,24 +270,14 @@ class DedupScaleSpec extends SparkSpec {
       s"two-level agreement degraded: $agree/4000 vs exhaustive argmax")
   }
 
-  test("ship fence: past RouteShipCap the centroid table rides a Broadcast — " +
-      "plan flips to topk_route_bc, rows byte-identical to the literal ship") {
+  test("ship path: two-level tables ride a Broadcast above and below 2048") {
     import spark.implicits._
     graft.functions.VectorFunctions.register(spark)
-    // RouteCeilingBench bound pin (BASELINE.md round 13): the measured
-    // crossover puts the broadcast ship ahead at EVERY k ≥ 2048, so
-    // the ship cap sits exactly at the two-level fence — the two-level
-    // regime never ships a task-binary literal. Decoupling them again
-    // must re-argue from a new measurement.
-    if (!sys.env.contains("SPARK_GRAFT_SEED_TWOLEVEL"))
-      assert(Similarity.RouteShipCap == Similarity.TwoLevelK,
-        "RouteShipCap is pinned to TwoLevelK by the round-13 measurement")
-    // synthetic table just above the ship cap (also above TwoLevelK →
-    // two-level routing); dim 4 keeps the driver-side coarseGroups
-    // pass cheap while honoring its 2^53 magnitude contract
+    // synthetic tables on both sides of 2048 rows; dim 4 keeps the
+    // driver-side coarseGroups pass cheap while honoring its 2^53
+    // magnitude contract
     val rnd = new scala.util.Random(23)
-    val k = (Similarity.RouteShipCap + 108).toInt
-    val rows = Array.tabulate(k) { c =>
+    def table(k: Int) = Array.tabulate(k) { c =>
       val cs = Seq.fill(4)(rnd.nextInt(2001).toLong - 1000)
       (c.toLong, cs, math.sqrt(cs.map(x => x.toDouble * x).sum))
     }.filter(_._3 > 0)
@@ -296,28 +286,24 @@ class DedupScaleSpec extends SparkSpec {
       .toDF("vec_id", "q")
       .withColumn("qn", sqrt(expr("dot_product(q, q)").cast("double")))
       .filter(col("qn") > 0)
-    val above = Similarity.assignRows(spark, qv, rows, 1)
+    // above TwoLevelK: assignRows routes two-level
+    val above = Similarity.assignRows(spark, qv, table(2156), 1)
     val planA = planString(above)
     assert(planA.contains("topk_route_bc"),
-      s"past RouteShipCap the route table must ship as a Broadcast:\n$planA")
+      s"past TwoLevelK the route table must ship as a Broadcast:\n$planA")
     assert(!planA.contains("Join") && !planA.contains("Exchange"),
       s"the broadcast ship path must stay row-local:\n$planA")
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("vec_id"), col("cid"), col("ccos")).collect()
-        .map(r => (r.getLong(0), r.getLong(1),
-          java.lang.Double.doubleToLongBits(r.getDouble(2))))
-        .sortBy(x => (x._1, x._2)).toSeq
-    // the literal ship over the SAME coarse/fine grouping must agree
-    // byte-for-byte — the fence is a ship mechanism, never a value
-    val (coarse, fine) = Similarity.coarseGroups(rows)
-    val literal = qv.select(col("*"), explode(call_function("topk_route",
-        col("q"), col("qn"), lit(1), lit(Similarity.CoarseProbes),
-        typedLit(coarse.toSeq), typedLit(fine.toSeq))).as("_a"))
-      .withColumn("cid", col("_a").getField("cid"))
-      .withColumn("ccos", col("_a").getField("ccos"))
-      .drop("_a")
-    assert(key(above) == key(literal),
-      "broadcast ship diverged from the literal ship on the same table")
+    // a sub-2048 table through the two-level kernel (the regime a
+    // seeded TwoLevelK engages) ships the same way
+    val small = table(300)
+    val below = qv.select(col("vec_id"),
+      explode(Similarity.routeAssign(spark, small, 1)).as("_a"))
+    val planB = planString(below)
+    assert(planB.contains("topk_route_bc"),
+      s"a sub-2048 route table must ship as a Broadcast:\n$planB")
+    assert(!planB.contains("Join") && !planB.contains("Exchange"),
+      s"the broadcast ship path must stay row-local:\n$planB")
+    assert(below.count() == qv.count(), "one assignment per vector at keep=1")
   }
 
   // ---- Zipfian-corpus stress (round 6): the cap/AQE levers proven ----

@@ -11,8 +11,9 @@ import scala.jdk.CollectionConverters._
 /** The bytes the service's CSV sinks write, pinned through
   * `Runner.startWithSinks`: depth levels that are present but
   * malformed on the wire (dropped or nulled exactly as `from_json`
-  * leaves them), the top-of-book quotes over the same tape, and the
-  * ohlcv candles' decimal, double and long columns. */
+  * leaves them, a level without its quantity skipped), the
+  * top-of-book quotes over the same tape, and the ohlcv candles'
+  * decimal, double and long columns. */
 class CsvBytesSpec extends SparkSpec {
 
   private val nl = System.lineSeparator
@@ -101,14 +102,24 @@ class CsvBytesSpec extends SparkSpec {
       "1727784000174,1727784001000,571.00000000,1.50000000,571.00000000,1.20000000,0.00000000,4,4"))
   }
 
-  // a level without its quantity: the explode's ANSI `getItem(1)`
-  // fails the depth query; the book fold skips the level
+  // a level without its quantity: both the depth explode and the book
+  // fold skip the level; the other side of its message still applies
   private val shortLevelTape = malformedTape.take(2) :+
     depthLine(162, """[["570.40000000"]]""", ask)
 
-  test("a level without a quantity stops the depth stream and is skipped by tob") {
-    val got = run("bnbusdt.spot.depth", shortLevelTape, Seq("binance.spot.bnbusdt.tob"),
-      Seq("tob"), Map("bnbusdt.spot" -> snapshot))
+  test("a level without a quantity is skipped by the depth and tob streams") {
+    val got = run("bnbusdt.spot.depth", shortLevelTape,
+      Seq("binance.spot.bnbusdt.depth", "binance.spot.bnbusdt.tob"), Seq("depth", "tob"),
+      Map("bnbusdt.spot" -> snapshot))
+    assert(got("depth") == csv(
+      "timestamp,local_timestamp,side,price,quantity,is_snapshot",
+      "1727784000999,1727784000999,ask,571.00000000,1.20000000,True",
+      "1727784000999,1727784000999,bid,570.90000000,3.10000000,True",
+      "1727784000156,1727784001000,ask,571.10000000,2.00000000,False",
+      "1727784000156,1727784001000,bid,571.00000000,1.50000000,False",
+      "1727784000156,1727784001000,ask,571.10000000,2.00000000,False",
+      "1727784000156,1727784001000,bid,571.00000000,1.50000000,False",
+      "1727784000162,1727784001000,ask,571.20000000,1.00000000,False"))
     assert(got("tob") == csv(
       "timestamp,local_timestamp,best_bid,best_bid_qty,best_ask,best_ask_qty,spread,bid_levels,ask_levels",
       "1727784000999,1727784000999,570.90000000,3.10000000,571.00000000,1.20000000,0.10000000,1,1",
@@ -116,11 +127,6 @@ class CsvBytesSpec extends SparkSpec {
       "1727784000156,1727784001000,571.00000000,1.50000000,571.00000000,1.20000000,0.00000000,2,2",
       "1727784000160,1727784001000,571.00000000,1.50000000,571.00000000,1.20000000,0.00000000,2,3",
       "1727784000162,1727784001000,571.00000000,1.50000000,571.00000000,1.20000000,0.00000000,2,3"))
-    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      run("bnbusdt.spot.depth", shortLevelTape, Seq("binance.spot.bnbusdt.depth"),
-        Seq("depth"), Map("bnbusdt.spot" -> snapshot))
-    }
-    assert(ex.getMessage.contains("INVALID_ARRAY_INDEX"), ex.getMessage)
   }
 
   // three windows: two buys in minute 0, a sell in minute 1 and a

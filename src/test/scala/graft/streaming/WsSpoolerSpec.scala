@@ -146,6 +146,78 @@ class WsSpoolerSpec extends SparkSpec {
     assert(sizes.sum == 20 && sizes.forall(_ <= 4), s"batch sizes $sizes")
   }
 
+  /** Runs one spooler against a fresh server pushing `messages` and
+    * stops it once every message arrived (the stop flushes the rest). */
+  private def spoolAll(streamDir: Path, messages: Seq[String], flushEvery: Int): Unit = {
+    val server = new TestWsServer(messages)
+    val port = server.start()
+    val spooler = new WsSpooler(
+      URI.create(s"ws://127.0.0.1:$port/ws"), streamDir, flushEvery)
+    try {
+      spooler.start()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (spooler.messagesReceived < messages.size &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+      assert(spooler.failure.isEmpty, s"ws transport error: ${spooler.failure}")
+      assert(spooler.messagesReceived == messages.size)
+    } finally {
+      spooler.stop()
+      server.stop()
+    }
+  }
+
+  private def spoolFiles(dir: Path): Map[String, Seq[Byte]] = {
+    val files = Files.list(dir)
+    try files.iterator().asScala.map(f =>
+      f.getFileName.toString -> Files.readAllBytes(f).toSeq).toMap
+    finally files.close()
+  }
+
+  test("a restarted spooler numbers after the existing files and replaces none") {
+    val spoolRoot = tmp("wsspool-restart")
+    val streamDir = spoolRoot.resolve("bnbusdt.spot.trade")
+    spoolAll(streamDir, (1 to 5).map(tradeLine), flushEvery = 2)
+    val first = spoolFiles(streamDir)
+    assert(first.keySet == Set("spool-00000000.jsonl", "spool-00000001.jsonl",
+      "spool-00000002.jsonl"), s"got ${first.keySet}")
+
+    // the replay reads the first spool, then follows the restart
+    val raw = new Dsv2ReplaySource(spoolRoot.toString, batchSize = 3,
+      fixedArrivalMs = Some(1727784005000L))
+      .stream(spark, EventId.parse("binance.spot.bnbusdt.trade"))
+    val q = Pipelines.trades(raw)
+      .writeStream.format("memory").queryName("ws_restart_out")
+      .option("checkpointLocation", tmp("ckpt").toString)
+      .start()
+    try {
+      q.processAllAvailable()
+      spoolAll(streamDir, (6 to 10).map(tradeLine), flushEvery = 2)
+      q.processAllAvailable()
+    } finally q.stop()
+
+    val second = spoolFiles(streamDir)
+    assert(second.keySet == first.keySet ++ Set("spool-00000003.jsonl",
+      "spool-00000004.jsonl", "spool-00000005.jsonl"), s"got ${second.keySet}")
+    first.foreach { case (name, bytes) =>
+      assert(second(name) == bytes, s"$name changed after the restart")
+    }
+    val got = spark.table("ws_restart_out").select("id").collect().map(_.getLong(0))
+    assert(got.sorted.toSeq == (1L to 10L), "every spooled line admitted exactly once")
+  }
+
+  test("a flush onto an existing spool file fails instead of replacing it") {
+    val dir = tmp("wsspool-clash")
+    val taken = dir.resolve("spool-00000000.jsonl")
+    Files.write(taken, Seq(tradeLine(1)).asJava)
+    val before = Files.readAllBytes(taken).toSeq
+    // never started, so it numbers from 0 onto the taken name
+    val spooler = new WsSpooler(URI.create("ws://127.0.0.1:1/ws"), dir, flushEvery = 10)
+    spooler.onMessage(tradeLine(2))
+    intercept[java.nio.file.FileAlreadyExistsException](spooler.flush())
+    assert(Files.readAllBytes(taken).toSeq == before)
+    assert(spoolFiles(dir).keySet == Set("spool-00000000.jsonl"), "no temp file left")
+  }
+
   // ---- depth: the reference's HARD half (spot_depth_etl.py:35-54) ----
 
   // Sync scenario over the live socket: snapshot lastUpdateId=158;

@@ -65,7 +65,7 @@ def main(seed, dst):
         FROM embeddings LIMIT 1""")
 
     # seeds >= 18 (round-13 kernel campaign, VERDICT r12 task 5):
-    # target the topk_assign/topk_route assignment kernels.
+    # target the topk_assign_bc/topk_route_bc assignment kernels.
     if seed >= 18:
         # engineered cosine TIES at the argmax: make the two LOWEST
         # vec_ids exact-duplicate vectors, so the two lowest-rank Lloyd
