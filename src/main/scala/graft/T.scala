@@ -228,8 +228,11 @@ object T {
 
   /** Verification-only branch override: when the env var
     * SPARK_GRAFT_FORCE_ABOVE_FENCE is set, every VALUE-IDENTICAL
-    * fence ([[belowFence]] call sites) takes its above-cap (100 TB)
-    * branch regardless of corpus size, while caps and derived values
+    * fence takes its above-cap (100 TB) branch regardless of corpus
+    * size — the three [[WindowRankCap]] fences ([[fencedRankN]],
+    * [[fencedCumSumN]], [[fencedLead]]), the [[DfCountCap]] shingle
+    * window (`Dedup.cappedShingles`) and every broadcast-or-hash hint
+    * ([[hintBySize]]) — while caps and derived values
     * still come from the real corpus — so one full Verify + DuckDB
     * sweep proves the ENGAGED branches oracle-exact on any corpus
     * (the Zipfian near-dup one included), instead of relying solely
@@ -246,7 +249,11 @@ object T {
   /** THE fence comparison — `n <= cap`, overridable to false by
     * [[ForceAboveFence]] for engaged-branch verification sweeps.
     * Every value-identical fence branches through here so the
-    * override cannot silently miss a site. */
+    * override cannot silently miss a site: five call sites, each
+    * citing its measured margin in its cap's or helper's scaladoc. A
+    * second branch whose margin does not show is deleted instead (the
+    * token hash and q35's collision count keep only their scale
+    * branch; BASELINE.md round 17). */
   private[graft] def belowFence(n: Long, cap: Long): Boolean =
     n <= cap && !ForceAboveFence
 
@@ -273,35 +280,35 @@ object T {
         .select(explode(split(col("text"), " ")).as("tok"))
         .agg(countDistinct(col("tok"))).head.getLong(0))
 
-  /** Join-strategy hint for a VOCAB-sized frame (distinct tokens, or a
-    * bounded multiple thereof): `broadcast()` below
-    * [[VocabBroadcastCap]] — the fast path at every test scale — and
-    * `shuffle_hash` above it, so the corpus-sized probe side shuffles
-    * once on the key but is never SORTED (SMJ would sort the corpus;
-    * a hash build of the vocab side is the right asymptotic shape).
-    * Hint-only: values are identical on both sides of the fence, so
-    * the oracles are untouched by construction. */
-  def hintVocab(spark: SparkSession, dir: String, df: DataFrame): DataFrame =
-    if (belowFence(vocabCount(spark, dir), VocabBroadcastCap)) broadcast(df)
-    else df.hint("shuffle_hash")
+  /** THE broadcast-or-hash policy for a join side whose size grows
+    * with the corpus: `broadcast(df)` while [[belowFence]]`(n, cap)`,
+    * else `df.hint("shuffle_hash")` — hash-build `df` on the shuffle,
+    * never sort the probe side (SMJ would sort the corpus). Hint-only:
+    * values are identical on both branches, so the oracles are
+    * untouched by construction. Every such site ([[hintVocab]],
+    * [[hintIdSet]], q58's eval shingles, the streaming decontamination
+    * eval grams) calls this, so the forced-above-fence mode flips all
+    * of them.
+    *
+    * Measured margin of the broadcast branch (perfbench `--ledger`
+    * corpus, 4-core box, plain vs SPARK_GRAFT_FORCE_ABOVE_FENCE=1,
+    * summed over the 12 queries hinted only through here — q11 q32
+    * q46 q55 q58 q59 q64 q75 q98 q101 q102 q107; BASELINE.md round
+    * 17): 73 vs 81 exchanges, 1.9 vs 7.0 MB shuffle write and
+    * 3.5–3.9 vs 4.5–4.9 s task CPU over two ledger pairs — the
+    * broadcast saves the probe side's shuffle.
+    * Wall time at sf0.01 sits within noise (`graft.Bench` forced/plain
+    * 0.78–1.08 over those queries and q70), because the saved
+    * exchanges move a few MB at that scale. */
+  private[graft] def hintBySize(n: Long, cap: Long, df: DataFrame): DataFrame =
+    if (belowFence(n, cap)) broadcast(df) else df.hint("shuffle_hash")
 
-  /** Attach `out` = [[phash]](`tok`) to `df` — the token-hash
-    * primitive of the fingerprint/simhash family. Below the vocab
-    * fence the hash is computed once per DISTINCT token and
-    * broadcast-joined back (cheaper than md5-ing every occurrence
-    * while the vocab fits an executor); ABOVE it the hash is computed
-    * ROW-LOCAL — a distinct-token dim grows with the corpus (Heap's
-    * law, the [[hintVocab]] disease) and may neither broadcast nor
-    * justify shuffling the corpus on tok, while md5-per-occurrence is
-    * embarrassingly parallel at any scale. The hash of a given token
-    * is identical on both paths, so results never change across the
-    * flip. */
-  def vocabHash(spark: SparkSession, dir: String, df: DataFrame,
-      tok: String = "tok", out: String = "h"): DataFrame =
-    if (belowFence(vocabCount(spark, dir), VocabBroadcastCap)) {
-      val dim = df.select(col(tok)).distinct().withColumn(out, phash(col(tok)))
-      df.join(broadcast(dim), Seq(tok))
-    } else df.withColumn(out, phash(col(tok)))
+  /** Join-strategy hint for a VOCAB-sized frame (distinct tokens, or a
+    * bounded multiple thereof): [[hintBySize]] on the memoized
+    * distinct-token count against [[VocabBroadcastCap]] — the
+    * broadcast is the fast path at every test scale. */
+  def hintVocab(spark: SparkSession, dir: String, df: DataFrame): DataFrame =
+    hintBySize(vocabCount(spark, dir), VocabBroadcastCap, df)
 
   /** Corpus-id-set broadcast fence cap: a frame of doc/vec ids DERIVED
     * from the corpus (near-dup victims, flagged docs) grows linearly
@@ -313,14 +320,11 @@ object T {
 
   /** Join-strategy hint for a corpus-derived ID SET whose only a
     * priori bound is the row count of `table` (its superset):
-    * `broadcast()` while that count fits [[IdBroadcastCap]] — every
-    * test scale — and `shuffle_hash` above it (hash-build the id set,
-    * never sort the corpus side). Hint-only: values identical on both
-    * sides of the fence, oracles untouched by construction. */
+    * [[hintBySize]] on that count against [[IdBroadcastCap]] — the
+    * broadcast at every test scale. */
   def hintIdSet(spark: SparkSession, dir: String, table: String,
       df: DataFrame): DataFrame =
-    if (belowFence(snapCount(spark, dir, table), IdBroadcastCap)) broadcast(df)
-    else df.hint("shuffle_hash")
+    hintBySize(snapCount(spark, dir, table), IdBroadcastCap, df)
 
   /** Distributed exact rank — the scale-safe replacement for a
     * row_number/ntile window whose partition is the whole corpus (or a
@@ -490,7 +494,15 @@ object T {
     * it is every test scale; above it the single window task becomes
     * the straggler that cannot survive 100 TB, so the rank flips to
     * the distributed form. Values identical by construction: same
-    * total order, same rank semantics. */
+    * total order, same rank semantics.
+    *
+    * Measured margin of the window branch (`graft.Bench`, sf0.01,
+    * 4-core box, min-of-3, forced/plain wall ratio; BASELINE.md round
+    * 17): q20 1.71, q63 1.76, q79 1.86, q81 2.21, q39 1.28, q44 1.19,
+    * q90 1.43 — the distributed form's range exchange, stamp persist
+    * and offset join cost up to 2.2× there.
+    * The ratios understate it: [[distRank]] persists its stamped
+    * frame, so min-of-3's second and third runs read that cache. */
   private[graft] val WindowRankCap = 4000000L
 
   /** Df-count fence for the capped-shingle family

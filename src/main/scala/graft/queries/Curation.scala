@@ -38,10 +38,8 @@ object Curation {
     val evalSh = sh.filter(col("source") === "src0")
       .select(col("shingle")).distinct()
       .withColumn("hit", lit(1L))
-    val evalHinted =
-      if (graft.T.belowFence(snapScalar(d, "evalsh:documents")(evalSh.count()), VocabBroadcastCap))
-        broadcast(evalSh)
-      else evalSh.hint("shuffle_hash")
+    val evalHinted = hintBySize(
+      snapScalar(d, "evalsh:documents")(evalSh.count()), VocabBroadcastCap, evalSh)
     sh.filter(col("source") =!= "src0")
       .join(evalHinted, Seq("shingle"), "left")
       .groupBy(col("doc_id"))

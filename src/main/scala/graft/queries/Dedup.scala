@@ -508,11 +508,10 @@ object Dedup {
       |SELECT da, db FROM cand ORDER BY da, db""".stripMargin
 
   /** q29: SimHash near-dup — 32-bit term-frequency-weighted SimHash,
-    * pairs at Hamming distance ≤ 3. The token hash is computed once
-    * per DISTINCT token and broadcast-joined back while the vocab fits
-    * an executor, row-local above the vocab fence (T.vocabHash — a
-    * distinct-token dim grows with the corpus and may not broadcast at
-    * 100 TB).
+    * pairs at Hamming distance ≤ 3. The token hash is row-local on
+    * each (doc, token) row — embarrassingly parallel at any scale, with
+    * no distinct-token dim (vocabulary-sized, growing with the corpus)
+    * to build, count or broadcast.
     *
     * Pairing uses band-prefix blocking, not an all-pairs cartesian:
     * the 32-bit signature is split into 4 bands of 8 bits, and
@@ -524,11 +523,10 @@ object Dedup {
     * which is what survives a 100× corpus. */
   private[queries] def simhashSignatures(s: SparkSession, d: String): DataFrame = {
     val tokens = toks(s, d)
-    // token hash rides the vocab fence (T.vocabHash): broadcast-dim
-    // hash-once below the cap, row-local md5 above — the distinct-token
-    // dim is vocabulary-sized and grows with the corpus (Heap's law)
-    vocabHash(s, d,
-        tokens.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("cnt")))
+    // hash BEFORE the bit explode: a non-generator column in the
+    // explode's own select is evaluated per exploded row (32 md5s)
+    tokens.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("cnt"))
+      .withColumn("h", phash(col("tok")))
       .select(col("doc_id"), col("cnt"), col("h"),
         explode(sequence(lit(0), lit(31))).as("b"))
       .withColumn("contrib",

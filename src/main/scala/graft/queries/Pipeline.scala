@@ -64,9 +64,9 @@ object Pipeline {
     // groupBy(doc_id) + the doc_id attach join) disappears: the
     // pipeline tokenizes the corpus twice, not three times, and the
     // md5 fold runs over SURVIVORS only where the old shape hashed
-    // every document. Value identity: fpCol ≡ fingerprintsOf per doc
-    // (TextEdgeSpec), and the old inner attach join was 1:1 on
-    // doc_id over the same null-text-filtered doc set.
+    // every document. Value identity: fpCol ≡ the explode+groupBy
+    // fingerprint per doc (TextEdgeSpec), and the old inner attach
+    // join was 1:1 on doc_id over the same null-text-filtered doc set.
     val quality = TextAnalysis.qualityScored(
         tbl(s, d, "documents"), "lang", "text")
       .filter(col("quality") >= 0.6)

@@ -364,63 +364,56 @@ object TextAnalysis {
     * never overflow, where an unreduced Σ h·ord would overflow Int64
     * at ~90k-token documents while DuckDB's HUGEINT kept going.
     *
-    * Collision-count fence (round 10, closing the last documented
-    * corpus-keyed window residual): below `T.WindowRankCap` docs the
-    * count is the (fp)-partitioned window; above it a mega-dup
-    * fingerprint (one boilerplate doc duplicated 10⁸×) would buffer
-    * its whole group in ONE window task, so the count flips to a
-    * partial-agg groupBy(fp) — map-side combine collapses the group —
-    * hash-joined back on the same (fp) key (shuffle_hash: the counts
-    * side is narrow and aggregated but distinct-fp-sized, i.e.
-    * corpus-growing, so it may neither broadcast nor SMJ-sort the
-    * per-doc side). The per-doc frame is PINNED to an explicit (fp)
-    * exchange so the counts aggregate and the join probe canonicalize
-    * to ONE exchange (the pairOverlaps discipline) — without the pin
-    * each subtree would re-run the whole tokenize+md5 fingerprint
-    * pipeline; the pinned exchange moves only slim (doc_id, fp) rows,
-    * the same volume the window branch shuffles. Values identical by
-    * construction. */
+    * The fingerprint is the oracle's shape: posexplode, a row-local
+    * md5 per token occurrence (no distinct-token dim to count, build or
+    * broadcast at any scale) and a groupBy(doc_id) sum; a null text
+    * explodes to nothing, so that document is absent, as in the
+    * oracle's unnest. [[fpCol]]'s fold costs 2× here (sf0.1; BASELINE.md
+    * round 17): the join's inferred IsNotNull(fp) re-runs it in the
+    * scan filter and the pruned counts side gets its own exchange.
+    *
+    * The collision count is a partial-agg groupBy(fp) — map-side
+    * combine collapses a mega-dup fingerprint (one boilerplate doc
+    * duplicated 10⁸×) before the shuffle, where an (fp)-window would
+    * buffer the whole group in ONE task — hash-joined back on the same
+    * (fp) key (shuffle_hash: the counts side is aggregated but
+    * distinct-fp-sized, i.e. corpus-growing, so it may neither
+    * broadcast nor SMJ-sort the per-doc side). The per-doc frame is
+    * PINNED to an explicit (fp) exchange so the counts aggregate and
+    * the join probe canonicalize to ONE exchange (the pairOverlaps
+    * discipline) — without the pin each subtree would re-run the
+    * tokenize+md5 pipeline; the pinned exchange moves only slim
+    * (doc_id, fp) rows. */
   private[queries] def q35(s: SparkSession, d: String): DataFrame = {
-    val fps = fingerprintsOf(s, d, tbl(s, d, "documents"))
-    val counted =
-      if (graft.T.belowFence(snapCount(s, d, "documents"), graft.T.WindowRankCap))
-        fps.withColumn("n_same_fp",
-          count(lit(1)).over(Window.partitionBy("fp")).cast("long"))
-      else {
-        val pinned = fps.repartition(col("fp"))
-        pinned.join(
-          pinned.groupBy("fp").agg(count(lit(1)).cast("long").as("n_same_fp"))
-            .hint("shuffle_hash"),
-          Seq("fp"))
-      }
-    counted.select(col("doc_id"), col("fp"), col("n_same_fp"))
+    val pinned = tbl(s, d, "documents")
+      .select(col("doc_id"),
+        posexplode(split(col("text"), " ")).as(Seq("ord", "tok")))
+      .groupBy("doc_id")
+      .agg((sum((phash(col("tok")) * (col("ord") + 1L)) % 1000000007L)
+        % 1000000007L).as("fp"))
+      .repartition(col("fp"))
+    pinned.join(
+        pinned.groupBy("fp").agg(count(lit(1)).cast("long").as("n_same_fp"))
+          .hint("shuffle_hash"),
+        Seq("fp"))
+      .select(col("doc_id"), col("fp"), col("n_same_fp"))
       .orderBy("doc_id")
   }
 
-  /** (doc_id, fp) rolling-hash fingerprints — the exact-dedup core
-    * shared by q35 (which adds the collision-count window + output
-    * sort) and q55's stage 2 (which consumes it BARE: composing the
-    * full q35 would drag a corpus-wide window partition on `fp` and a
-    * global sort into the pipeline just to discard them). The token
-    * hash rides the vocab fence ([[graft.T.vocabHash]]): hash-once-
-    * per-distinct-token via a broadcast dim below the cap, row-local
-    * md5 above it — the dim is vocabulary-sized and may not broadcast
-    * at corpus scale. */
-  /** The [[fingerprintsOf]] sum as ONE row-local expression over the
-    * raw text column (round-16, q55): fp is a per-document fold —
-    * Σ_k (phash(tok_k)·k mod p) mod p over 1-based positions — so a
-    * consumer that already scans the corpus for other per-doc stats
-    * (q55's quality gate) can compute it in the SAME projection
-    * instead of paying [[fingerprintsOf]]'s second corpus scan, its
-    * posexplode, the vocab-dim distinct+join, the groupBy(doc_id)
-    * exchange, and the doc_id attach join. Value identity with the
-    * explode+groupBy form: same Long terms, addition is associative,
-    * and the per-token hash is T.phash on BOTH vocabHash fence
-    * branches — asserted against [[fingerprintsOf]] per document on
+  /** (doc_id, fp) rolling-hash fingerprint as ONE row-local expression
+    * over the raw text column — q55's stage 2 (q35 keeps the explode
+    * form, see there). fp is a per-document fold, Σ_k (phash(tok_k)·k
+    * mod p) mod p over
+    * 1-based positions, so a consumer that already scans the corpus
+    * for other per-doc stats (q55's quality gate) computes it in the
+    * SAME projection — no posexplode, no groupBy(doc_id) exchange and
+    * no doc_id attach join. Value identity with the oracle's
+    * unnest+groupBy form: same Long terms and addition is associative
+    * — asserted against an explode+groupBy reference per document on
     * the pathological-text corpus in TextEdgeSpec. Null text yields a
-    * null fp (split(null) →
-    * aggregate over null → null), mirroring the doc's absence from
-    * the exploded form — q55 filters null text upstream either way. */
+    * null fp (split(null) → aggregate over null → null), where the
+    * exploded form has no row for the doc, so consumers filter null
+    * text first. */
   private[graft] def fpCol(text: Column): Column = {
     val t = split(text, " ")
     aggregate(t,
@@ -428,17 +421,6 @@ object TextAnalysis {
       (s, x) => struct((s("ord") + 1L).as("ord"),
         (s("acc") + (phash(x) * (s("ord") + 1L)) % 1000000007L).as("acc")),
       s => s("acc") % 1000000007L)
-  }
-
-  private[queries] def fingerprintsOf(s: SparkSession, d: String,
-      docs: DataFrame): DataFrame = {
-    val perTok = docs
-      .select(col("doc_id"),
-        posexplode(split(col("text"), " ")).as(Seq("ord", "tok")))
-    vocabHash(s, d, perTok)
-      .groupBy("doc_id")
-      .agg((sum((col("h") * (col("ord") + 1L)) % 1000000007L)
-        % 1000000007L).as("fp"))
   }
 
   private val q35Sql =

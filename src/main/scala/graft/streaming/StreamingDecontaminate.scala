@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   * streaming state store at all) — FENCED like its batch twin q58:
   * the eval side is counted ONCE at stream-build time (it is static),
   * and past [[graft.T.VocabBroadcastCap]] distinct grams the hint
-  * flips to a shuffled hash build instead of OOMing every micro-batch.
+  * ([[graft.T.hintBySize]]) flips to a shuffled hash build instead of
+  * OOMing every micro-batch.
   * State held: zero bytes. A keyed
   * per-doc rollup is deliberately NOT done here — hits stream out
   * append-mode at line rate and the consumer aggregates at whatever
@@ -39,9 +40,7 @@ object StreamingDecontaminate {
     // join build for the stream's whole lifetime (same assumption as
     // batch q58's fence: eval sets are benchmarks, but the fence makes
     // the bound enforced rather than assumed).
-    val hinted =
-      if (eval.count() <= graft.T.VocabBroadcastCap) broadcast(eval)
-      else eval.hint("shuffle_hash")
+    val hinted = graft.T.hintBySize(eval.count(), graft.T.VocabBroadcastCap, eval)
     docs
       .select(col("doc_id"),
         GramHash.tokenHashes(split(col("text"), " ")).as("hh"))

@@ -87,16 +87,23 @@ object RestSnapshotClient {
     n.elements().asScala.map(l =>
       l.elements().asScala.map(_.asText()).toSeq).toSeq
 
+  private def isSide(n: JsonNode): Boolean =
+    n.isArray && n.elements().asScala.forall(_.isArray)
+
   /** Parses the depth-snapshot wire JSON — the one parser for REST
     * bodies and `snapshot_dir` files alike. Non-JSON and a wrong shape
-    * both fail as `malformed depth snapshot`. */
+    * both fail as `malformed depth snapshot`: `lastUpdateId` must be an
+    * integral number that fits a long, and each side an array of
+    * array levels. Jackson's lenient accessors would otherwise read
+    * `"lastUpdateId":"abc"` as 0 (a snapshot no update ever bridges),
+    * a string side as no levels, and an object side as its values. */
   private[graft] def parse(body: String): BookSnapshot = {
     val root = try mapper.readTree(body)
       catch { case _: JsonProcessingException => null }
-    require(root != null && root.hasNonNull("lastUpdateId") &&
-      root.has("bids") && root.has("asks"),
+    val id = if (root == null) null else root.path("lastUpdateId")
+    require(id != null && id.isIntegralNumber && id.canConvertToLong &&
+      isSide(root.path("bids")) && isSide(root.path("asks")),
       s"malformed depth snapshot: ${body.take(200)}")
-    BookSnapshot(root.get("lastUpdateId").asLong(),
-      levels(root.get("bids")), levels(root.get("asks")))
+    BookSnapshot(id.asLong(), levels(root.get("bids")), levels(root.get("asks")))
   }
 }

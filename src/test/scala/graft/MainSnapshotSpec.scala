@@ -43,7 +43,11 @@ class MainSnapshotSpec extends AnyFunSuite {
   }
 
   test("a malformed snapshot file fails as a malformed depth snapshot") {
-    Seq("""{"bids": [], "asks": []}""", """{"lastUpdateId":158,"bids":[""").foreach { body =>
+    Seq("""{"bids": [], "asks": []}""", """{"lastUpdateId":158,"bids":[""",
+        """{"lastUpdateId":"abc","bids":[],"asks":[]}""",
+        """{"lastUpdateId":158,"bids":"x","asks":[]}""",
+        """{"lastUpdateId":158,"bids":[],"asks":{"a":["571.0","1.2"]}}""",
+        """{"lastUpdateId":158,"bids":[158],"asks":[]}""").foreach { body =>
       val ex = intercept[IllegalArgumentException] {
         Main.loadSnapshots(Seq("binance.spot.bnbusdt.depth"),
           Some(snapshotDir(body).toString), None)

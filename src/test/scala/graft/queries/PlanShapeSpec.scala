@@ -549,69 +549,29 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  /** q35's collision-count fence (round 10, the last documented
-    * corpus-keyed window residual): below WindowRankCap docs the
-    * n_same_fp count is an (fp)-partitioned window; above it a
-    * mega-dup fingerprint would buffer its whole group in one window
-    * task, so the count flips to a partial-agg groupBy(fp) hash-joined
-    * back (shuffle_hash — the counts side is aggregated but
-    * distinct-fp-sized, so it neither broadcasts nor SMJ-sorts). */
-  test("q35 collision-count fence: fp window below the doc cap, partial-agg join above, identical rows") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-fpfence").toString
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    graft.T.snapScalar(tmp, "count:documents")(graft.T.WindowRankCap + 1)
-    val below = planString(SparkEntry.queries("q35_fingerprint")(spark, sfDir))
-    assert(below.contains("Window"),
-      s"q35 below the cap counts collisions via the fp window:\n$below")
-    val aboveDf = SparkEntry.queries("q35_fingerprint")(spark, tmp)
-    val above = planString(aboveDf)
-    assert(!above.contains("Window"),
-      s"q35 above the cap must not buffer fp groups in a window:\n$above")
-    assert(above.contains("ShuffledHashJoin") && !above.contains("SortMergeJoin"),
-      s"the aggregated counts must hash-join back, never sort:\n$above")
-    val a = SparkEntry.queries("q35_fingerprint")(spark, sfDir).collect().toSeq
-    val b = aboveDf.collect().toSeq
-    assert(a == b, "q35 results changed across the collision-count fence flip")
-  }
-
-  /** The vocab fence extended to the token-HASH sites a join hint
-    * can't cover: fingerprintsOf (q35; q55's stage 2 fused the
-    * fingerprint into its quality scan as the always-row-local
-    * TextAnalysis.fpCol in round 16) and
-    * simhashSignatures (q29) hash tokens through a broadcast
-    * distinct-token dim — vocabulary-sized, the one broadcast side
-    * that grows with the corpus. Above the cap T.vocabHash computes
-    * the hash ROW-LOCAL instead (the same md5 per token ⇒ identical
-    * values): no dim join, no broadcast, and no corpus shuffle on tok
-    * at any scale — md5-per-occurrence is embarrassingly parallel. */
-  test("vocabHash fence: q35/q29 hash via broadcast dim below the cap, row-local above, identical rows") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-vhash").toString
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    graft.T.snapScalar(tmp, "vocab:documents")(graft.T.VocabBroadcastCap + 1)
-    // q35's ONLY join is the vocabHash dim — above the fence its plan
-    // must carry no join of any kind
-    val below35 = planString(SparkEntry.queries("q35_fingerprint")(spark, sfDir))
-    assert(below35.contains("BroadcastHashJoin"),
-      s"q35 below the cap must hash via the broadcast dim:\n$below35")
-    val above35 = planString(SparkEntry.queries("q35_fingerprint")(spark, tmp))
-    assert(!above35.contains("Join"),
-      s"q35 above the cap must hash row-local — no join at all:\n$above35")
-    // q29 keeps its band-blocked self-join; the vocabHash dim joins
-    // vanish (strictly fewer BHJs) and nothing degrades to a sort
-    val bhj = (p: String) => "BroadcastHashJoin".r.findAllIn(p).size
-    val below29 = planString(SparkEntry.queries("q29_simhash_neardup")(spark, sfDir))
-    val above29 = planString(SparkEntry.queries("q29_simhash_neardup")(spark, tmp))
-    assert(bhj(above29) < bhj(below29),
-      s"q29 above the cap must drop the dim broadcast:\n$above29")
-    assert(!above29.contains("SortMergeJoin") && !above29.contains("ShuffledHashJoin"),
-      s"row-local hashing must not introduce a corpus shuffle join:\n$above29")
-    for (name <- Seq("q35_fingerprint", "q29_simhash_neardup")) {
-      val a = SparkEntry.queries(name)(spark, sfDir).collect().toSeq
-      val b = SparkEntry.queries(name)(spark, tmp).collect().toSeq
-      assert(a == b, s"$name results changed across the vocabHash flip")
-    }
+  /** The token-hash family has one path at every scale: q35 md5s
+    * each token occurrence before its groupBy(doc_id) sum and q29 each
+    * (doc, token) row, so neither builds, counts or
+    * broadcasts a distinct-token dim — vocabulary-sized, the one
+    * broadcast side that grows with the corpus. q35's collision count
+    * is a partial-agg groupBy(fp) hash-joined back (shuffle_hash: the
+    * counts side is aggregated but distinct-fp-sized, so it neither
+    * broadcasts nor SMJ-sorts), never an (fp)-window that would buffer
+    * a mega-dup fingerprint's whole group in one task. */
+  test("q35/q29 token hash is row-local; q35 counts collisions by partial agg, never a window") {
+    val p35 = planString(SparkEntry.queries("q35_fingerprint")(spark, sfDir))
+    assert(!p35.contains("Window"),
+      s"q35 must not buffer fp groups in a window:\n$p35")
+    assert(!p35.contains("BroadcastHashJoin"),
+      s"q35 hashes row-local — no dim broadcast, no broadcast counts:\n$p35")
+    assert("ShuffledHashJoin".r.findAllIn(p35).size == 1 &&
+      !p35.contains("SortMergeJoin"),
+      s"the aggregated counts must hash-join back once, never sort:\n$p35")
+    val p29 = planString(SparkEntry.queries("q29_simhash_neardup")(spark, sfDir))
+    assert("BroadcastHashJoin \\[tok#".r.findFirstIn(p29).isEmpty,
+      s"q29 must not join a broadcast tok dim:\n$p29")
+    assert(!p29.contains("SortMergeJoin") && !p29.contains("ShuffledHashJoin"),
+      s"row-local hashing must not introduce a corpus shuffle join:\n$p29")
   }
 
   /** The id-set fence (T.hintIdSet): q55's near-dup victim set has no

@@ -98,20 +98,27 @@ class TextEdgeSpec extends SparkSpec {
     assert(q33 >= 7, s"q33 emitted only $q33 of the edge docs")
   }
 
-  /** Round-16 q55 stage-2 fusion: the row-local fold fingerprint
-    * (TextAnalysis.fpCol) must agree bit-for-bit with the
-    * explode+groupBy form (fingerprintsOf) on every document of the
-    * edge corpus — including the empty-text, whitespace-only,
-    * 20k-char-single-token, unicode and maximal-repetition rows, and
-    * including the null-text doc's ABSENCE from both sides. */
+  /** The row-local fold fingerprint (TextAnalysis.fpCol, q55's
+    * stage 2) must agree bit-for-bit with the explode+groupBy
+    * form — the oracle's unnest shape, kept here as the reference — on
+    * every document of the edge corpus: the empty-text,
+    * whitespace-only, 20k-char-single-token, unicode and
+    * maximal-repetition rows, and the null-text doc's ABSENCE from
+    * both sides. */
   test("fpCol ≡ fingerprintsOf per document on the edge corpus") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions._
     val docs = graft.T.tbl(spark, dir, "documents")
-    val viaExplode = TextAnalysis.fingerprintsOf(spark, dir, docs)
+    val viaExplode = docs
+      .select(col("doc_id"),
+        posexplode(split(col("text"), " ")).as(Seq("ord", "tok")))
+      .groupBy("doc_id")
+      .agg((sum((graft.T.phash(col("tok")) * (col("ord") + 1L)) % 1000000007L)
+        % 1000000007L).as("fp"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaFold = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), TextAnalysis.fpCol(col("text")).as("fp"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(!viaExplode.contains(9000002L), "the null-text doc has no tokens")
     assert(viaFold == viaExplode,
       s"fold/explode fingerprint mismatch: ${
         (viaFold.toSet diff viaExplode.toSet).take(5)} vs ${

@@ -118,8 +118,14 @@ class RestSnapshotSpec extends SparkSpec {
     try intercept[IllegalArgumentException] {
       new RestSnapshotClient(URI.create(s"http://127.0.0.1:$port")).fetch("nope")
     } finally bad.stop()
-    intercept[IllegalArgumentException] {
-      RestSnapshotClient.parse("""{"bids": [], "asks": []}""") // no lastUpdateId
+    Seq("""{"bids": [], "asks": []}""", // no lastUpdateId
+        """{"lastUpdateId":"abc","bids":[],"asks":[]}""",
+        """{"lastUpdateId":158.5,"bids":[],"asks":[]}""",
+        """{"lastUpdateId":158,"bids":"x","asks":[]}""",
+        """{"lastUpdateId":158,"bids":[],"asks":{"a":["571.0","1.2"]}}""",
+        """{"lastUpdateId":158,"bids":["570.9"],"asks":[]}""").foreach { body =>
+      val ex = intercept[IllegalArgumentException](RestSnapshotClient.parse(body))
+      assert(ex.getMessage.contains("malformed depth snapshot"), ex.getMessage)
     }
   }
 

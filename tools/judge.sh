@@ -1,6 +1,8 @@
 #!/bin/bash
 # One-command judge harness: compile, correctness-at-sf0.01 vs the
-# DuckDB oracle, entry smoke, bench at sf0.1 + the per-query floor
+# DuckDB oracle (plain, then again with every value-identical fence
+# forced onto its above-cap branch: SPARK_GRAFT_FORCE_ABOVE_FENCE=1),
+# entry smoke, bench at sf0.1 + the per-query floor
 # regression gate (any query > 3x its best-known quiet minimum in
 # tools/floors.json gets a BenchOne retry; a reproduced excess is a
 # named regression and fails "ok") — one summary JSON at the end (and
@@ -38,12 +40,23 @@ echo "== 2/5 correctness (Verify sf0.01 + DuckDB oracle)" >&2
 SPARK_GRAFT_CPUS=8 tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/judge_v \
   > /tmp/judge_verify.log 2>&1 || {
   echo '{"ok":false,"stage":"verify","log":"/tmp/judge_verify.log"}'; exit 1; }
-CHECK=$(python3 tools/check.py /root/testdata/sf0.01 /tmp/judge_v 2>&1 | tail -1)
-# CHECK looks like: == 111 pass, 0 fail ==; a crashed check.py yields no
-# match — the guards map that to pass=0/fail=unknown(-1 -> not ok)
-# instead of tripping set -e before the summary prints
-NPASS=$(echo "$CHECK" | grep -oE '[0-9]+ pass' | grep -oE '[0-9]+' || echo 0)
-NFAIL=$(echo "$CHECK" | grep -oE '[0-9]+ fail' | grep -oE '[0-9]+' || echo -1)
+# check.py's last line looks like: == 111 pass, 0 fail ==; a crashed
+# check.py yields no match — the guards map that to pass=0/fail=
+# unknown(-1 -> not ok) instead of tripping set -e before the summary
+# prints. Prints "<pass> <fail>" for the outputs in $1.
+oracle_check() {
+  local check
+  check=$(python3 tools/check.py /root/testdata/sf0.01 "$1" 2>&1 | tail -1)
+  echo "$(echo "$check" | grep -oE '[0-9]+ pass' | grep -oE '[0-9]+' || echo 0)" \
+    "$(echo "$check" | grep -oE '[0-9]+ fail' | grep -oE '[0-9]+' || echo -1)"
+}
+read -r NPASS NFAIL <<< "$(oracle_check /tmp/judge_v)"
+
+echo "== 2.5/5 correctness, fences forced above their caps" >&2
+SPARK_GRAFT_FORCE_ABOVE_FENCE=1 SPARK_GRAFT_CPUS=8 tools/run.sh graft.Verify \
+  /root/testdata/sf0.01 /tmp/judge_v_forced > /tmp/judge_verify_forced.log 2>&1 || {
+  echo '{"ok":false,"stage":"verify_forced","log":"/tmp/judge_verify_forced.log"}'; exit 1; }
+read -r FPASS FFAIL <<< "$(oracle_check /tmp/judge_v_forced)"
 
 echo "== 3/5 smoke" >&2
 SMOKE=$(tools/run.sh graft.Smoke 2>&1 | grep -oE 'ENTRY ROWS=[0-9]+' | grep -oE '[0-9]+' || echo 0)
@@ -130,10 +143,12 @@ cfl = {"regressions": []}
 if os.path.exists('/tmp/judge_cores_floors.json') and "$CORES" == "1":
     cfl = json.load(open('/tmp/judge_cores_floors.json'))
 print(json.dumps({
-  "ok": int("$NFAIL") == 0 and int("$BENCH_ERRS") == 0
+  "ok": int("$NFAIL") == 0 and int("$FFAIL") == 0
+        and int("$BENCH_ERRS") == 0
         and int("$SMOKE") > 0 and int("$SUITE_OK") == 1
         and int("$STREAM_OK") == 1 and int("$NREG") == 0,
   "correct_pass": int("$NPASS"), "correct_fail": int("$NFAIL"),
+  "correct_forced_pass": int("$FPASS"), "correct_forced_fail": int("$FFAIL"),
   "entry_rows": int("$SMOKE"), "bench_total_sec": float("$BENCH_TOTAL"),
   "bench_errors": int("$BENCH_ERRS"),
   "floor_flagged": sorted(floors["flagged"]),
